@@ -237,7 +237,7 @@ def lsh_candidates(
     pruning in the Jaccard path. A boilerplate-dominated bucket (every doc
     sharing a site template) contributes O(bucket²) candidate pairs while
     carrying no discriminative signal; at corpus scale one such bucket is
-    the whole job (measured in scripts/skew_drill.py). Default None keeps
+    the whole job (measured: SCALE.md, "Skew drill"). Default None keeps
     the exact candidate set."""
     band_rows = band_table(sigs, bands, rows_per_band)
     # both self-join sides read band_rows — persist or the minhash

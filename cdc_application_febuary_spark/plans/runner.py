@@ -18,11 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
 
 from ..operators.scd2 import current_state
-from ..streaming.changelog_stream import (
-    StreamConfig,
-    file_source,
-    start_changelog_stream,
-)
+from ..streaming.changelog_stream import StreamConfig, run_file_changelog_pipeline
 from .pipeline import FullLoadResult, run_full_load
 from .snapshot import StreamStartPlan, resolve_snapshot_mode
 
@@ -162,7 +158,8 @@ def run_file_pipeline(
     snapshot_ts_ms: int | None = None,
 ) -> PipelineRunResult:
     """Run one table's pipeline: optional snapshot, then drain the change
-    feed (availableNow) into the same SCD2 target under a checkpoint."""
+    feed (availableNow) into the same SCD2 target under a checkpoint.
+    Raises ``TimeoutError`` if the drain outlasts ``stream_timeout_sec``."""
     target = f"{work_root.rstrip('/')}/target"
     plan = resolve_snapshot_mode(
         engine,
@@ -198,12 +195,9 @@ def run_file_pipeline(
         checkpoint_dir=f"{work_root.rstrip('/')}/checkpoint",
         trigger={"availableNow": True},
     )
-    q = start_changelog_stream(
-        spark, file_source(spark, changelog_dir), payload_schema, cfg
+    run_file_changelog_pipeline(
+        spark, changelog_dir, payload_schema, cfg, timeout_sec=stream_timeout_sec
     )
-    q.awaitTermination(stream_timeout_sec)
-    if q.isActive:
-        q.stop()
     return PipelineRunResult(full_load=fl, stream_plan=plan, target_path=target)
 
 

@@ -198,12 +198,18 @@ def run_file_changelog_pipeline(
     source_dir: str,
     payload_schema: StructType,
     cfg: StreamConfig,
-    timeout_sec: int = 120,
+    timeout_sec: float = 120,
 ) -> None:
     """Convenience: run the file-source pipeline to completion
-    (availableNow) — the test/replay path."""
+    (availableNow) — the test/replay path. A stream still running after
+    ``timeout_sec`` is stopped and raises ``TimeoutError``: its output
+    would otherwise be silently truncated."""
     raw = file_source(spark, source_dir, cfg.max_files_per_trigger)
     q = start_changelog_stream(spark, raw, payload_schema, cfg)
     q.awaitTermination(timeout_sec)
     if q.isActive:
         q.stop()
+        raise TimeoutError(
+            f"changelog pipeline {cfg.pipeline_id!r} still running after "
+            f"{timeout_sec}s; stopped with its output incomplete"
+        )

@@ -4,6 +4,7 @@ monitoring listener."""
 
 import json
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
@@ -103,6 +104,20 @@ def test_checkpoint_resume_no_reprocess(spark, tmp_path):
     target = spark.read.parquet(cfg.target_path)
     assert target.count() == 2  # not 3 — no reprocessing
     assert sorted(r["id"] for r in target.collect()) == [1, 2]
+
+
+def test_drain_timeout_raises_and_stops(spark, tmp_path):
+    feed = tmp_path / "feed"
+    _write_feed(feed, [_envelope("c", None, {"id": 1, "name": "a"}, 1000)])
+    cfg = StreamConfig(
+        pipeline_id="slow",
+        target_path=str(tmp_path / "target"),
+        event_log_path=str(tmp_path / "event_log"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+    )
+    with pytest.raises(TimeoutError, match="slow"):
+        run_file_changelog_pipeline(spark, str(feed), PAYLOAD, cfg, timeout_sec=0.01)
+    assert spark.streams.active == []
 
 
 def test_metrics_listener(spark, tmp_path):
