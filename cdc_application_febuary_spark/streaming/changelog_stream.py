@@ -5,10 +5,12 @@
 
 The reference does this with a Kafka Connect sink JVM + a Python consumer
 thread (at-least-once: DB commit then Kafka commit,
-`cdc_event_logger.py:273-291`). Spark gives exactly-once *within the
-pipeline* via the streaming checkpoint; the appends are made idempotent
-under foreachBatch retry by stamping `__batch_id` so replayed batches can be
-deduplicated/overwritten downstream.
+`cdc_event_logger.py:273-291`). Here foreachBatch persists each decoded
+micro-batch once and runs its appends (dead-letter, SCD2 target, event
+log) as concurrent Spark jobs over it. Each append commits on its own and
+is stamped `__batch_id`; a failed batch may have committed any subset of
+them, and its replay (same batch id, from the checkpoint) is identifiable
+so consumers can deduplicate/overwrite downstream.
 
 Sources:
   * Kafka (production): `kafka_source` — subscribePattern covers the
@@ -24,8 +26,10 @@ size; the event-log append is date-partitioned so monitoring queries prune.
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
@@ -138,49 +142,73 @@ def start_changelog_stream(
 ) -> StreamingQuery:
     """Wire the dual-sink graph and start it.
 
-    foreachBatch appends to (a) the SCD2 target and (b) the event log in the
-    same micro-batch function — both stamped with `__batch_id`, so a batch
-    replayed after a crash is identifiable (idempotent consumers filter on
-    max batch id per key; the reference settles for at-least-once, T2)."""
+    foreachBatch persists the decoded batch, then runs the dead-letter (if
+    configured), SCD2-target and event-log appends concurrently, one thread
+    and one Spark job each, inside the query's job group. It waits for all
+    of them and re-raises the first error, which fails the batch. The
+    appends commit independently, so a failed batch may have committed any
+    subset of them; every row is stamped `__batch_id`, so the replay of a
+    failed batch is identifiable (idempotent consumers filter on max batch
+    id per key; the reference settles for at-least-once, T2)."""
     decoded = decoded_changelog(raw, payload_schema)
     payload_cols = [f.name for f in payload_schema.fields]
 
     def sink(batch: DataFrame, batch_id: int) -> None:
-        batch = batch.persist()
-        try:
-            if cfg.dead_letter_path is not None:
-                # quarantine undecodable events with provenance
-                # (errors.tolerance=all: log and continue)
-                (
-                    batch.where(F.col("_corrupt"))
-                    .select(
-                        F.col("_raw_value").alias("raw_value"),
-                        "topic",
-                        "partition",
-                        "offset",
-                        F.lit(batch_id).alias("__batch_id"),
-                        F.current_timestamp().alias("quarantined_at"),
-                    )
-                    .write.mode("append")
-                    .parquet(cfg.dead_letter_path)
+        # corrupt rows never reach the target or the event log
+        clean = batch.where(~F.col("_corrupt"))
+
+        def dead_letter() -> None:
+            # quarantine undecodable events with provenance
+            # (errors.tolerance=all: log and continue)
+            (
+                batch.where(F.col("_corrupt"))
+                .select(
+                    F.col("_raw_value").alias("raw_value"),
+                    "topic",
+                    "partition",
+                    "offset",
+                    F.lit(batch_id).alias("__batch_id"),
+                    F.current_timestamp().alias("quarantined_at"),
                 )
-            # corrupt rows never reach the target or the event log
-            batch = batch.where(~F.col("_corrupt"))
-            scd2_rows = batch.select(
+                .write.mode("append")
+                .parquet(cfg.dead_letter_path)
+            )
+
+        def target() -> None:
+            clean.select(
                 *[F.col("row")[c].alias(c) for c in payload_cols],
                 F.col("op").alias("__op"),
                 F.unix_millis(F.col("source_ts")).alias("__source_ts_ms"),
                 F.col("__deleted"),
                 F.lit(batch_id).alias("__batch_id"),
-            )
-            scd2_rows.write.mode("append").parquet(cfg.target_path)
+            ).write.mode("append").parquet(cfg.target_path)
+
+        def event_log() -> None:
             (
-                _event_log_rows(batch, cfg.pipeline_id)
+                _event_log_rows(clean, cfg.pipeline_id)
                 .withColumn("__batch_id", F.lit(batch_id))
                 .write.mode("append")
                 .partitionBy("event_date")
                 .parquet(cfg.event_log_path)
             )
+
+        steps = [target, event_log]
+        if cfg.dead_letter_path is not None:
+            steps.insert(0, dead_letter)
+        # the first write to reach the cached batch builds it; the others
+        # wait on its block lock and read it, so decode runs once
+        batch.persist()
+        try:
+            # One wrapper per step: each captures its own copy of this
+            # thread's local properties (the query's job group, which
+            # query.stop() cancels), and a write sets its execution id in it.
+            with ThreadPoolExecutor(max_workers=len(steps)) as pool:
+                futures = [
+                    pool.submit(inheritable_thread_target(batch.sparkSession)(step))
+                    for step in steps
+                ]
+            for f in futures:
+                f.result()
         finally:
             batch.unpersist()
 

@@ -62,8 +62,7 @@ def test_two_pipelines_run_concurrently_with_isolated_checkpoints(
 
     for _, _, q in queries:
         q.awaitTermination(120)
-        if q.isActive:
-            q.stop()
+        assert not q.isActive and q.exception() is None
 
     for p, cfg, _ in queries:
         target = spark.read.parquet(cfg.target_path)
@@ -95,8 +94,7 @@ def test_event_log_partition_pruning(spark, tmp_path):
     )
     q = start_changelog_stream(spark, file_source(spark, str(feed)), PAYLOAD, cfg)
     q.awaitTermination(120)
-    if q.isActive:
-        q.stop()
+    assert not q.isActive and q.exception() is None
 
     log = spark.read.parquet(cfg.event_log_path)
     assert log.select("event_date").distinct().count() == 5

@@ -5,13 +5,16 @@ monitoring listener."""
 import json
 
 import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
 from cdc_application_febuary_spark.operators.scd2 import current_state
 from cdc_application_febuary_spark.streaming.changelog_stream import (
     StreamConfig,
+    file_source,
     run_file_changelog_pipeline,
+    start_changelog_stream,
 )
 from cdc_application_febuary_spark.streaming.monitoring import (
     MetricsListener,
@@ -177,6 +180,66 @@ def test_dead_letter_quarantine(spark, tmp_path):
     assert "this is not json at all {{{" in raws
     log = spark.read.parquet(cfg.event_log_path)
     assert log.count() == 2  # corrupt rows never reach the event log
+
+
+def test_sink_jobs_stay_in_stream_job_group(spark, tmp_path):
+    """The sink's writes run on their own threads; each must still run in
+    the query's job group, which query.stop() cancels."""
+    feed = tmp_path / "feed"
+    _write_feed(
+        feed,
+        [
+            _envelope("c", None, {"id": 1, "name": "a"}, 1000),
+            "not json {{{",
+        ],
+    )
+    cfg = StreamConfig(
+        pipeline_id="jobgroup",
+        target_path=str(tmp_path / "target"),
+        event_log_path=str(tmp_path / "event_log"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        dead_letter_path=str(tmp_path / "dlq"),
+    )
+    q = start_changelog_stream(spark, file_source(spark, str(feed)), PAYLOAD, cfg)
+    q.awaitTermination(120)
+    assert not q.isActive and q.exception() is None
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    assert len(jobs) >= 3  # dead-letter, target and event-log writes
+
+
+def test_failed_write_fails_batch_and_replay_is_identifiable(spark, tmp_path):
+    """A write that fails fails the batch and the query. The other appends
+    of that batch may already have committed; the replay from the
+    checkpoint reuses its batch id, so its rows can be told apart."""
+    feed = tmp_path / "feed"
+    _write_feed(
+        feed,
+        [
+            _envelope("c", None, {"id": 1, "name": "a"}, 1000),
+            "not json {{{",
+            _envelope("c", None, {"id": 2, "name": "b"}, 2000),
+        ],
+    )
+    target = tmp_path / "target"
+    target.write_text("a regular file where the target directory belongs")
+    cfg = StreamConfig(
+        pipeline_id="failwrite",
+        target_path=str(target),
+        event_log_path=str(tmp_path / "event_log"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+    )
+    with pytest.raises(StreamingQueryException):
+        run_file_changelog_pipeline(spark, str(feed), PAYLOAD, cfg)
+    assert spark.streams.active == []
+
+    target.unlink()
+    run_file_changelog_pipeline(spark, str(feed), PAYLOAD, cfg)
+    rows = spark.read.parquet(cfg.target_path).collect()
+    assert sorted(r["id"] for r in rows) == [1, 2]
+    log = spark.read.parquet(cfg.event_log_path)
+    # the failed attempt may have committed its event-log append too
+    assert log.count() in (2, 4)
+    assert {r["__batch_id"] for r in log.select("__batch_id").collect()} == {0}
 
 
 def test_health_thresholds(spark):
