@@ -1221,8 +1221,6 @@ def stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-fails the gate. The final target must value-equal the batch SQL
     replay of the same filter — kept-doc count, line counters, and an id
     checksum all hash-compared."""
-    import os
-    import pathlib
     import tempfile
 
     from pyspark.sql.types import (
@@ -1233,29 +1231,21 @@ def stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     from ..operators.c4 import c4_line_filter
+    from ..streaming.replay import land_feed, run_replay
 
     work = tempfile.mkdtemp(prefix="squality_")
     feed = f"{work}/feed"
-    pathlib.Path(feed).mkdir()
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    payload = F.to_json(F.struct("doc_id", "text")).alias("value")
-    for i in range(3):
-        stage = f"{work}/stage{i}"
-        (
-            docs.where(F.col("doc_id") % 3 == i)
-            .select(payload)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .text(stage)
-        )
-        part = next(pathlib.Path(stage).glob("part-*"))
-        dest = pathlib.Path(feed) / f"b{i}.txt"
-        part.rename(dest)
-        # strictly increasing mtimes pin file -> micro-batch order (the
-        # file source orders by modification time; same-millisecond
-        # writes tie and scramble arrival) — required below where the
-        # double-commit simulation replays batch 2 BY ID.
-        os.utime(dest, (1_700_000_000 + i, 1_700_000_000 + i))
+    payload = F.to_json(F.struct("doc_id", "text"))
+    # landed in mtime order, so file i is micro-batch i — required below
+    # where the double-commit simulation replays batch 2 BY ID
+    files = land_feed(
+        feed,
+        [
+            docs.where(F.col("doc_id") % 3 == i).select(payload)
+            for i in range(3)
+        ],
+    )
 
     schema = StructType(
         [StructField("doc_id", LongType()), StructField("text", StringType())]
@@ -1283,21 +1273,19 @@ def stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(f"{target}/__batch_id={int(batch_id)}")
         )
 
-    q = (
-        stream.writeStream.foreachBatch(gate)
-        .option("checkpointLocation", f"{work}/ckpt")
-        .trigger(availableNow=True)
-        .start()
+    run_replay(
+        spark,
+        stream.writeStream.foreachBatch(gate),
+        f"{work}/ckpt",
+        what="stream_quality_gate",
     )
-    q.awaitTermination(120)
-    # Simulated double-commit: replay batch 2 (feed file b2.txt, the
-    # third micro-batch by pinned mtime order) through the same sink
-    # with the SAME batch_id. The idempotent sink overwrites the
-    # partition in place; the oracle-hashed aggregate below therefore
-    # only matches if the replay did NOT change the target.
+    # Simulated double-commit: replay batch 2 (the third feed file)
+    # through the same sink with the SAME batch_id. The idempotent sink
+    # overwrites the partition in place; the oracle-hashed aggregate below
+    # therefore only matches if the replay did NOT change the target.
     replay = (
         spark.read.format("text")
-        .load(f"{feed}/b2.txt")
+        .load(files[2])
         .select(F.from_json("value", schema).alias("p"))
         .select("p.doc_id", "p.text")
     )

@@ -756,8 +756,6 @@ def pipeline_lifecycle_runner(spark: SparkSession, sf_dir: str) -> DataFrame:
     as the Derby query: the two must agree with each other and with the
     fixture replay."""
     import json as _json
-    import os as _os
-    import pathlib
     import tempfile
 
     from pyspark.sql.types import (
@@ -770,7 +768,7 @@ def pipeline_lifecycle_runner(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..plans.runner import run_connected_pipeline, target_current_state
     from ..sources.connect_config import SourceConnection
-    from .pipeline_ops import _replay_shuffle
+    from ..streaming.replay import land_feed, replay_conf
 
     cust = load_table(spark, sf_dir, "customer").where(
         F.col("c_custkey") < 200
@@ -808,19 +806,16 @@ def pipeline_lifecycle_runner(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     work = tempfile.mkdtemp(prefix="liferunner_")
-    feed = pathlib.Path(work, "feed")
-    feed.mkdir()
-    ticks = [
-        (
-            "t1_inserts.json",
+    feed = f"{work}/feed"
+    # three ticks: inserts, updates, deletes
+    land_feed(
+        feed,
+        [
             [
                 env("c", None, {"k": k, "bal": bal, "segment": seg}, 2000)
                 for k, bal, seg in rows
                 if k >= 150
             ],
-        ),
-        (
-            "t2_updates.json",
             [
                 env(
                     "u",
@@ -831,20 +826,13 @@ def pipeline_lifecycle_runner(spark: SparkSession, sf_dir: str) -> DataFrame:
                 for k, bal, _ in rows
                 if k < 30
             ],
-        ),
-        (
-            "t3_deletes.json",
             [
                 env("d", {"k": k, "bal": bal, "segment": None}, None, 4000)
                 for k, bal, _ in rows
                 if k % 10 == 7 and k < 150
             ],
-        ),
-    ]
-    for i, (name, lines) in enumerate(ticks):
-        f = feed / name
-        f.write_text("\n".join(lines) + "\n")
-        _os.utime(f, (1_700_000_000 + i, 1_700_000_000 + i))
+        ],
+    )
 
     payload = StructType(
         [
@@ -853,7 +841,7 @@ def pipeline_lifecycle_runner(spark: SparkSession, sf_dir: str) -> DataFrame:
             StructField("segment", StringType()),
         ]
     )
-    with _replay_shuffle(spark):
+    with replay_conf(spark):
         plan, res = run_connected_pipeline(
             spark,
             pipeline_id="liferunner",
@@ -869,7 +857,7 @@ def pipeline_lifecycle_runner(spark: SparkSession, sf_dir: str) -> DataFrame:
             schema="public",
             tables=["customer"],
             source=src,
-            changelog_dir=str(feed),
+            changelog_dir=feed,
             payload_schema=payload,
             work_root=work,
             snapshot_ts_ms=1000,
@@ -962,8 +950,6 @@ def multi_pipeline_concurrent(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape: N pipelines = N streaming queries + N partition dirs; the
     report reads event-log metadata-sized aggregates, never refeeds."""
     import json as _json
-    import os as _os
-    import pathlib
     import tempfile
 
     from pyspark.sql.types import (
@@ -979,7 +965,7 @@ def multi_pipeline_concurrent(spark: SparkSession, sf_dir: str) -> DataFrame:
         file_source,
         start_changelog_stream,
     )
-    from .pipeline_ops import _replay_shuffle
+    from ..streaming.replay import drain, land_feed, replay_conf
 
     cust = load_table(spark, sf_dir, "customer").where(
         F.col("c_custkey") < 120
@@ -1029,20 +1015,17 @@ def multi_pipeline_concurrent(spark: SparkSession, sf_dir: str) -> DataFrame:
         [StructField("k", LongType()), StructField("bal", DoubleType())]
     )
     queries, cfgs = [], {}
-    with _replay_shuffle(spark):
+    with replay_conf(spark):
         for pid, s in specs.items():
-            feed = pathlib.Path(work, pid, "feed")
-            feed.mkdir(parents=True)
-            ticks = [
-                (
-                    "t1_inserts.json",
+            feed = f"{work}/{pid}/feed"
+            # three ticks: inserts, updates, deletes
+            land_feed(
+                feed,
+                [
                     [
                         env("c", None, {"k": k, "bal": b}, 2000)
                         for k, b in s["keys"]
                     ],
-                ),
-                (
-                    "t2_updates.json",
                     [
                         env(
                             "u",
@@ -1053,20 +1036,13 @@ def multi_pipeline_concurrent(spark: SparkSession, sf_dir: str) -> DataFrame:
                         for k, b in s["keys"]
                         if s["upd"](k)
                     ],
-                ),
-                (
-                    "t3_deletes.json",
                     [
                         env("d", {"k": k, "bal": b}, None, 4000)
                         for k, b in s["keys"]
                         if s["del"](k)
                     ],
-                ),
-            ]
-            for i, (name, lines) in enumerate(ticks):
-                f = feed / name
-                f.write_text("\n".join(lines) + "\n")
-                _os.utime(f, (1_700_000_000 + i,) * 2)
+                ],
+            )
             cfg = StreamConfig(
                 pipeline_id=pid,
                 target_path=f"{work}/{pid}/target",
@@ -1078,22 +1054,15 @@ def multi_pipeline_concurrent(spark: SparkSession, sf_dir: str) -> DataFrame:
             # start WITHOUT awaiting: both pipelines run at once
             queries.append(
                 start_changelog_stream(
-                    spark, file_source(spark, str(feed), 1), payload, cfg
+                    spark, file_source(spark, feed, 1), payload, cfg
                 )
             )
-        for q in queries:
-            q.awaitTermination(120)
-            if q.isActive:
-                # ADVICE r9: a silent q.stop() here truncates the feed on a
-                # contended machine and the failure then surfaces downstream
-                # as an oracle hash mismatch / isolation noise — raise the
-                # actual cause instead.
+        try:
+            for q in queries:
+                drain(q, 120, f"pipeline stream {q.name}")
+        finally:
+            for q in queries:  # no-op on a finished stream
                 q.stop()
-                raise RuntimeError(
-                    f"pipeline stream {q.name or q.id} still active after"
-                    " 120 s awaitTermination — feed did not drain; aborting"
-                    " instead of truncating (machine contention?)"
-                )
 
     # isolation: each target holds only its own tenant's keys
     for pid, lo, hi in (("p1", 0, 60), ("p2", 60, 120)):
@@ -1208,8 +1177,6 @@ def stream_backpressure_bounded_replay(
     arithmetic is bit-identical across engines; sums route through
     DECIMAL(18,2) per CLAUDE.md."""
     import json as _json
-    import os as _os
-    import pathlib
     import tempfile
 
     from pyspark.sql.types import (
@@ -1222,10 +1189,9 @@ def stream_backpressure_bounded_replay(
     from ..plans.runner import target_current_state
     from ..streaming.changelog_stream import (
         StreamConfig,
-        file_source,
-        start_changelog_stream,
+        run_file_changelog_pipeline,
     )
-    from .pipeline_ops import _replay_shuffle
+    from ..streaming.replay import land_feed, replay_conf
 
     rows = [
         (int(r["c_custkey"]), float(r["c_acctbal"]))
@@ -1259,56 +1225,39 @@ def stream_backpressure_bounded_replay(
     def bal4(k, b):
         return bal2(k, b) + 50.0
 
-    ticks = [
-        ("f1_ins.json", [env("c", None, {"k": k, "bal": b}, 1000)
-                         for k, b in rows]),
-        ("f2_upd.json", [env("u", {"k": k, "bal": b},
-                             {"k": k, "bal": bal2(k, b)}, 2000)
-                         for k, b in rows if k % 3 == 0]),
-        ("f3_del.json", [env("d", {"k": k, "bal": bal2(k, b)}, None, 3000)
-                         for k, b in rows if k % 7 == 0]),
-        ("f4_upd.json", [env("u", {"k": k, "bal": bal2(k, b)},
-                             {"k": k, "bal": bal4(k, b)}, 4000)
-                         for k, b in rows if k % 5 == 1 and k % 7 != 0]),
-        ("f5_ins.json", [env("c", None,
-                             {"k": k + 1000, "bal": b + 7.25}, 5000)
-                         for k, b in rows if k % 11 == 0]),
-        ("f6_upd.json", [env("u", {"k": k + 1000, "bal": b + 7.25},
-                             {"k": k + 1000, "bal": b + 7.25 + 25.0}, 6000)
-                         for k, b in rows if k % 11 == 0]),
-    ]
     work = tempfile.mkdtemp(prefix="backpressure_")
-    feed = pathlib.Path(work, "feed")
-    feed.mkdir(parents=True)
-    for i, (name, lines) in enumerate(ticks):
-        f = feed / name
-        f.write_text("\n".join(lines) + "\n")
-        _os.utime(f, (1_700_000_000 + i,) * 2)  # strict arrival order
+    feed = f"{work}/feed"
+    # insert, update, delete, update, late insert, late update
+    land_feed(feed, [
+        [env("c", None, {"k": k, "bal": b}, 1000) for k, b in rows],
+        [env("u", {"k": k, "bal": b}, {"k": k, "bal": bal2(k, b)}, 2000)
+         for k, b in rows if k % 3 == 0],
+        [env("d", {"k": k, "bal": bal2(k, b)}, None, 3000)
+         for k, b in rows if k % 7 == 0],
+        [env("u", {"k": k, "bal": bal2(k, b)},
+             {"k": k, "bal": bal4(k, b)}, 4000)
+         for k, b in rows if k % 5 == 1 and k % 7 != 0],
+        [env("c", None, {"k": k + 1000, "bal": b + 7.25}, 5000)
+         for k, b in rows if k % 11 == 0],
+        [env("u", {"k": k + 1000, "bal": b + 7.25},
+             {"k": k + 1000, "bal": b + 7.25 + 25.0}, 6000)
+         for k, b in rows if k % 11 == 0],
+    ])
 
     payload = StructType(
         [StructField("k", LongType()), StructField("bal", DoubleType())]
     )
     cfgs = {}
-    with _replay_shuffle(spark):
+    with replay_conf(spark):
         for mode, mft in (("unbounded", None), ("bounded", 1)):
-            cfg = StreamConfig(
+            cfgs[mode] = cfg = StreamConfig(
                 pipeline_id=f"bp_{mode}",
                 target_path=f"{work}/{mode}/target",
                 event_log_path=f"{work}/{mode}/event_log",
                 checkpoint_dir=f"{work}/{mode}/ckpt",
                 max_files_per_trigger=mft,
             )
-            cfgs[mode] = cfg
-            q = start_changelog_stream(
-                spark, file_source(spark, str(feed), mft), payload, cfg
-            )
-            q.awaitTermination(120)
-            if q.isActive:
-                q.stop()
-                raise RuntimeError(
-                    f"backpressure replay ({mode}) still active after 120 s"
-                    " — feed did not drain"
-                )
+            run_file_changelog_pipeline(spark, feed, payload, cfg)
 
     states = {
         m: target_current_state(spark, cfgs[m].target_path, ["k"]).select(

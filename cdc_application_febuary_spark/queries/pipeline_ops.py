@@ -17,6 +17,7 @@ from ..functions import text as T
 from ..functions.changelog import is_deleted, normalize_op
 from ..functions.lsn import long_to_pg_lsn, pg_lsn_to_long
 from ..operators import dedup, lineage, multimodal, profiling, scd2, similarity
+from ..streaming.replay import land_feed, run_replay
 
 QUERIES: dict = {}
 ORACLES: dict = {}
@@ -30,42 +31,6 @@ def _q(name: str, oracle: str | None = None):
         return fn
 
     return deco
-
-
-import contextlib  # noqa: E402
-
-
-@contextlib.contextmanager
-def _replay_shuffle(spark: SparkSession, n: int | None = None):
-    """Bound the state-store partition count for a file-replay streaming
-    lifecycle query. A FRESH checkpoint pins its state partitioning from
-    ``spark.sql.shuffle.partitions`` at stream start; the replay feeds are
-    sf-bounded (hundreds of KB), so 32 state stores x 4-5 store instances
-    x N micro-batches of per-batch snapshot+delta commits are pure fixed
-    cost (~3x the whole query, measured 20.8 s -> 6.6 s solo on
-    stream_stream_left_outer in r8). r10 re-measured the remaining cost:
-    per-micro-batch addBatch time still scaled with the store count, and
-    2 partitions vs 8 cut the stream phase a further ~2-3x at identical
-    output (A/B'd on stream_stream_left_outer, output hash bit-identical
-    across 8/2 x tmp/tmpfs). State partitioning is invisible to query
-    VALUES (watermarks and aggregations are partitioning-invariant; every
-    replay query is oracle-hashed), so the harness default is the
-    smallest count that still exercises multi-partition state. The
-    PRODUCTION operators inherit the session conf untouched — on a real
-    cluster state partitioning sizes to rate x window as before; only the
-    bench replay harness dials down. Override for experiments via
-    $SPARK_GRAFT_REPLAY_STATE_PARTITIONS or the ``n`` argument.
-    """
-    import os as _os
-
-    if n is None:
-        n = int(_os.environ.get("SPARK_GRAFT_REPLAY_STATE_PARTITIONS", "2"))
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
 # ---------------------------------------------------------------------------
@@ -2355,27 +2320,20 @@ def stateful_running_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     work = tempfile.mkdtemp(prefix="stateful_q_")
     feed = f"{work}/feed"
-    ev.coalesce(1).write.json(feed)
+    land_feed(feed, [ev.select(F.to_json(F.struct("event_id", "key")))])
     stream = spark.readStream.schema("event_id long, key string").json(feed)
     out_dir = f"{work}/out"
-    # a fresh checkpoint pins the state-store partition count from the
-    # current shuffle conf; a handful of keys don't need 32 state stores
-    old_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            running_counts(stream.groupBy(F.col("key")))
-            .writeStream.foreachBatch(
-                lambda b, _id: b.write.mode("append").parquet(out_dir)
-            )
-            .outputMode("update")
-            .option("checkpointLocation", f"{work}/ck")
-            .trigger(availableNow=True)
-            .start()
+    run_replay(
+        spark,
+        running_counts(stream.groupBy(F.col("key")))
+        .writeStream.foreachBatch(
+            lambda b, _id: b.write.mode("append").parquet(out_dir)
         )
-        q.awaitTermination(120)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_shuffle)
+        .outputMode("update"),
+        f"{work}/ck",
+        what="stateful_running_counts",
+        n=8,
+    )
     # one row per key per micro-batch; the lifetime total is the max
     return (
         spark.read.parquet(out_dir)
@@ -8027,27 +7985,24 @@ def stream_join_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     work = tempfile.mkdtemp(prefix="stream_enrich_")
     feed = f"{work}/feed"
     target = f"{work}/target"
-    import os
-
-    os.makedirs(feed, exist_ok=True)
     orders = load_table(spark, sf_dir, "orders").where(
         F.col("o_orderkey") < 120
     )
-    (
-        orders.select(
-            F.to_json(
-                F.struct(
-                    "o_orderkey",
-                    "o_custkey",
-                    F.col("o_totalprice").cast("decimal(18,2)").alias(
-                        "amount"
-                    ),
+    land_feed(
+        feed,
+        [
+            orders.select(
+                F.to_json(
+                    F.struct(
+                        "o_orderkey",
+                        "o_custkey",
+                        F.col("o_totalprice").cast("decimal(18,2)").alias(
+                            "amount"
+                        ),
+                    )
                 )
-            ).alias("value")
-        )
-        .coalesce(1)
-        .write.mode("overwrite")
-        .text(feed)
+            )
+        ],
     )
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_mktsegment"
@@ -8087,13 +8042,12 @@ def stream_join_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(target)
         )
 
-    q = (
-        stream.writeStream.foreachBatch(enrich)
-        .option("checkpointLocation", f"{work}/ckpt")
-        .trigger(availableNow=True)
-        .start()
+    run_replay(
+        spark,
+        stream.writeStream.foreachBatch(enrich),
+        f"{work}/ckpt",
+        what="stream_join_enrichment",
     )
-    q.awaitTermination(120)
     return spark.read.parquet(target).orderBy("o_orderkey")
 
 
@@ -8352,35 +8306,30 @@ def stream_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").where(
         F.col("ts") < F.lit("2024-01-03 00:00:00").cast("timestamp")
     )
-    (
-        ev.select(
-            F.to_json(
-                F.struct(
-                    F.col("event_id"),
-                    F.col("event_type"),
-                    F.unix_micros("ts").alias("ts_us"),
-                )
-            ).alias("value")
-        )
-        .coalesce(1)
-        .write.mode("overwrite")
-        .text(feed)
-    )
     import json as _json
-    import pathlib as _pl
 
-    def _sentinel(name: str, iso_us: int) -> None:
-        _pl.Path(feed, name).write_text(
-            _json.dumps(
-                {"event_id": -1, "event_type": "__sentinel", "ts_us": iso_us}
+    # sentinels at 2024-01-03 01:00 and 01:10 UTC in epoch-micros: both
+    # watermarks stay below their own window's end, so neither sentinel
+    # window finalizes
+    land_feed(
+        feed,
+        [
+            ev.select(
+                F.to_json(
+                    F.struct(
+                        F.col("event_id"),
+                        F.col("event_type"),
+                        F.unix_micros("ts").alias("ts_us"),
+                    )
+                )
             )
-            + "\n"
-        )
-
-    # 2024-01-03 01:00 and 01:10 UTC in epoch-micros: both watermarks stay
-    # below their own window's end, so neither sentinel window finalizes
-    _sentinel("z1_sentinel.json", 1704243600_000_000)
-    _sentinel("z2_sentinel.json", 1704244200_000_000)
+        ]
+        + [
+            [_json.dumps({"event_id": -1, "event_type": "__sentinel",
+                          "ts_us": us})]
+            for us in (1704243600_000_000, 1704244200_000_000)
+        ],
+    )
     from pyspark.sql.types import (
         LongType,
         StringType,
@@ -8413,16 +8362,14 @@ def stream_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("w.start").alias("window_start"), "event_type", "cnt"
         )
     )
-    with _replay_shuffle(spark):
-        q = (
-            stream.writeStream.format("parquet")
-            .option("path", target)
-            .option("checkpointLocation", f"{work}/ckpt")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
+    run_replay(
+        spark,
+        stream.writeStream.format("parquet")
+        .option("path", target)
+        .outputMode("append"),
+        f"{work}/ckpt",
+        what="stream_windowed_counts",
+    )
     return spark.read.parquet(target).orderBy("window_start", "event_type")
 
 
@@ -8573,86 +8520,76 @@ def stateful_totals_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from ..compat.protobuf_compat import ensure_protobuf_on_workers
-    from ..streaming.stateful_v2 import running_counts_tws
+    from ..streaming.stateful_v2 import ROCKSDB_PROVIDER, running_counts_tws
 
     if not ensure_protobuf_on_workers(spark):
         raise RuntimeError(
             "no protobuf runtime available for transformWithState"
         )
-    prev = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
+    work = tempfile.mkdtemp(prefix="tws_q_")
+    feed, target = f"{work}/feed", f"{work}/target"
+    ev = load_table(spark, sf_dir, "events").where(
+        F.col("ts") < F.lit("2024-01-02 00:00:00").cast("timestamp")
     )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
+    # two files (event_id parity) -> two micro-batches
+    # (maxFilesPerTrigger=1): totals must accumulate across batches, not
+    # reset. Split explicitly: coalesce(2) over a one-partition input
+    # writes one file.
+    land_feed(
+        feed,
+        [
+            ev.where(F.col("event_id") % 2 == i).select(
+                F.to_json(F.struct("event_id", "event_type"))
+            )
+            for i in range(2)
+        ],
     )
-    try:
-        work = tempfile.mkdtemp(prefix="tws_q_")
-        feed, target = f"{work}/feed", f"{work}/target"
-        ev = load_table(spark, sf_dir, "events").where(
-            F.col("ts") < F.lit("2024-01-02 00:00:00").cast("timestamp")
-        )
-        # two files -> two micro-batches (maxFilesPerTrigger=1): totals
-        # must accumulate across batches, not reset
-        ev.select(
-            F.to_json(F.struct("event_id", "event_type")).alias("value")
-        ).coalesce(2).write.mode("overwrite").text(feed)
-        from pyspark.sql.types import (
-            LongType,
-            StringType,
-            StructField,
-            StructType,
-        )
+    from pyspark.sql.types import (
+        LongType,
+        StringType,
+        StructField,
+        StructType,
+    )
 
-        schema = StructType(
-            [
-                StructField("event_id", LongType()),
-                StructField("event_type", StringType()),
-            ]
-        )
-        stream = (
-            spark.readStream.format("text")
-            .option("maxFilesPerTrigger", "1")
-            .load(feed)
-            .select(F.from_json("value", schema).alias("p"))
-            .select("p.event_type")
-        )
-        out = running_counts_tws(stream.groupBy(F.col("event_type")))
+    schema = StructType(
+        [
+            StructField("event_id", LongType()),
+            StructField("event_type", StringType()),
+        ]
+    )
+    stream = (
+        spark.readStream.format("text")
+        .option("maxFilesPerTrigger", "1")
+        .load(feed)
+        .select(F.from_json("value", schema).alias("p"))
+        .select("p.event_type")
+    )
+    out = running_counts_tws(stream.groupBy(F.col("event_type")))
 
-        def sink(batch: DataFrame, batch_id: int) -> None:
-            batch.withColumn("__bid", F.lit(batch_id)).write.mode(
-                "append"
-            ).parquet(target)
+    def sink(batch: DataFrame, batch_id: int) -> None:
+        batch.withColumn("__bid", F.lit(batch_id)).write.mode(
+            "append"
+        ).parquet(target)
 
-        with _replay_shuffle(spark):
-            q = (
-                out.writeStream.foreachBatch(sink)
-                .outputMode("update")
-                .option("checkpointLocation", f"{work}/ckpt")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(180)
-        emitted = spark.read.parquet(target)
-        return (
-            emitted.groupBy("key")
-            .agg(
-                F.max_by(
-                    "events", F.struct(F.col("__bid"), F.col("events"))
-                ).alias("events")
-            )
-            .orderBy("key")
+    run_replay(
+        spark,
+        out.writeStream.foreachBatch(sink).outputMode("update"),
+        f"{work}/ckpt",
+        timeout_s=180,
+        what="stateful_totals_v2",
+        provider=ROCKSDB_PROVIDER,
+    )
+    emitted = spark.read.parquet(target)
+    return (
+        emitted.groupBy("key")
+        .agg(
+            F.max_by(
+                "events", F.struct(F.col("__bid"), F.col("events"))
+            ).alias("events")
         )
-    finally:
-        if prev is not None:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev
-            )
-        else:
-            spark.conf.unset(
-                "spark.sql.streaming.stateStore.providerClass"
-            )
+        .orderBy("key")
+    )
+
 
 @_q(
     "stream_stream_attribution",
@@ -8675,13 +8612,13 @@ def stream_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     purchases replay through separate file streams, joined on user_id
     where the purchase lands within [click, click + 6h]
     (`streaming/joins.py:stream_stream_range_join`). Each side is two
-    files -> two micro-batches (maxFilesPerTrigger=1), so matches must
-    bridge batches through the join state store; the 90-day watermark
-    keeps every buffered row live for the whole replay, so the emitted
-    pairs are exactly the batch interval join (inner stream-stream joins
-    emit on match, not on watermark finalization). The returned rows are
-    the per-user pair counts and exact integer gap sums over the emitted
-    pairs."""
+    files (event_id parity) -> two micro-batches (maxFilesPerTrigger=1),
+    so matches must bridge batches through the join state store; the
+    90-day watermark keeps every buffered row live for the whole replay,
+    so the emitted pairs are exactly the batch interval join (inner
+    stream-stream joins emit on match, not on watermark finalization).
+    The returned rows are the per-user pair counts and exact integer gap
+    sums over the emitted pairs."""
     import tempfile
 
     from ..streaming.joins import stream_stream_range_join
@@ -8694,19 +8631,22 @@ def stream_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("buys", "purchase", "buy_ts"),
     ):
         path = f"{work}/{side}"
-        (
-            ev.where(F.col("event_type") == etype)
-            .select(
-                F.to_json(
-                    F.struct(
-                        F.col("user_id"),
-                        F.unix_micros("ts").alias("ts_us"),
+        land_feed(
+            path,
+            [
+                ev.where(
+                    (F.col("event_type") == etype)
+                    & (F.col("event_id") % 2 == i)
+                ).select(
+                    F.to_json(
+                        F.struct(
+                            F.col("user_id"),
+                            F.unix_micros("ts").alias("ts_us"),
+                        )
                     )
-                ).alias("value")
-            )
-            .coalesce(2)
-            .write.mode("overwrite")
-            .text(path)
+                )
+                for i in range(2)
+            ],
         )
         feeds[side] = (path, ts_name)
     from pyspark.sql.types import LongType, StructField, StructType
@@ -8744,16 +8684,14 @@ def stream_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("gap_us"),
     )
     target = f"{work}/target"
-    with _replay_shuffle(spark):
-        q = (
-            joined.writeStream.format("parquet")
-            .option("path", target)
-            .option("checkpointLocation", f"{work}/ckpt")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
+    run_replay(
+        spark,
+        joined.writeStream.format("parquet")
+        .option("path", target)
+        .outputMode("append"),
+        f"{work}/ckpt",
+        what="stream_stream_attribution",
+    )
     return (
         spark.read.parquet(target)
         .groupBy("user_id")
@@ -8788,7 +8726,6 @@ def stream_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact). Post-dedup per-type row counts must equal the original
     feed's distinct counts: n_rows == n_keys, any leaked duplicate
     breaks the hash."""
-    import pathlib
     import tempfile
 
     from ..streaming.joins import stream_dedup
@@ -8800,21 +8737,16 @@ def stream_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.unix_micros("ts").alias("ts_us"),
     )
-    payload = F.to_json(
-        F.struct("event_id", "event_type", "ts_us")
-    ).alias("value")
-    ev.select(payload).coalesce(1).write.mode("overwrite").text(feed)
-    for tag, mod in (("z1_dups", 3), ("z2_trips", 7)):
-        stage = f"{work}/{tag}"
-        (
-            ev.where(F.col("event_id") % mod == 0)
-            .select(payload)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .text(stage)
-        )
-        part = next(pathlib.Path(stage).glob("part-*"))
-        part.rename(pathlib.Path(feed) / f"{tag}.txt")
+    payload = F.to_json(F.struct("event_id", "event_type", "ts_us"))
+    # the originals, then the planted duplicates and triplicates
+    land_feed(
+        feed,
+        [ev.select(payload)]
+        + [
+            ev.where(F.col("event_id") % m == 0).select(payload)
+            for m in (3, 7)
+        ],
+    )
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
     schema = StructType(
@@ -8839,16 +8771,14 @@ def stream_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream, keys=["event_id"], ts_col="ts", watermark="90 days"
     )
     target = f"{work}/target"
-    with _replay_shuffle(spark):
-        q = (
-            deduped.writeStream.format("parquet")
-            .option("path", target)
-            .option("checkpointLocation", f"{work}/ckpt")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
+    run_replay(
+        spark,
+        deduped.writeStream.format("parquet")
+        .option("path", target)
+        .outputMode("append"),
+        f"{work}/ckpt",
+        what="stream_dedup_report",
+    )
     return (
         spark.read.parquet(target)
         .groupBy("event_type")
@@ -9287,7 +9217,6 @@ def stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     push the watermark past the horizon and trigger the flush batch;
     the sentinels' own clicks never finalize and never appear."""
     import json as _json
-    import pathlib
     import tempfile
 
     from ..streaming.joins import stream_stream_range_join
@@ -9305,34 +9234,29 @@ def stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("clicks", "click", "click_ts"),
         ("buys", "purchase", "buy_ts"),
     ):
-        path = pathlib.Path(work, side)
-        path.mkdir()
-        for hi, cond in enumerate(halves):
-            stage = f"{work}/{side}_h{hi}"
-            (
-                ev.where((F.col("event_type") == etype) & cond)
-                .select(
+        path = f"{work}/{side}"
+        # sentinels: 2024-01-12 00:00 and 00:10 UTC in epoch-micros —
+        # neither advances far enough to finalize ITSELF (needs
+        # watermark > own ts + 2h), so sentinel clicks never emit
+        land_feed(
+            path,
+            [
+                ev.where((F.col("event_type") == etype) & cond).select(
                     F.to_json(
                         F.struct(
                             F.col("user_id"),
                             F.unix_micros("ts").alias("ts_us"),
                         )
-                    ).alias("value")
+                    )
                 )
-                .coalesce(1)
-                .write.mode("overwrite")
-                .text(stage)
-            )
-            part = next(pathlib.Path(stage).glob("part-*"))
-            part.rename(path / f"h{hi}.txt")
-        # sentinels: 2024-01-12 00:00 and 00:10 UTC in epoch-micros —
-        # neither advances far enough to finalize ITSELF (needs
-        # watermark > own ts + 2h), so sentinel clicks never emit
-        for zi, ts_us in (("z1", 1705017600_000_000), ("z2", 1705018200_000_000)):
-            (path / f"{zi}.txt").write_text(
-                _json.dumps({"user_id": -1, "ts_us": ts_us}) + "\n"
-            )
-        feeds[side] = (str(path), ts_name)
+                for cond in halves
+            ]
+            + [
+                [_json.dumps({"user_id": -1, "ts_us": us})]
+                for us in (1705017600_000_000, 1705018200_000_000)
+            ],
+        )
+        feeds[side] = (path, ts_name)
     from pyspark.sql.types import LongType, StructField, StructType
 
     schema = StructType(
@@ -9369,16 +9293,15 @@ def stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("gap_us"),
     )
     target = f"{work}/target"
-    with _replay_shuffle(spark):
-        q = (
-            joined.writeStream.format("parquet")
-            .option("path", target)
-            .option("checkpointLocation", f"{work}/ckpt")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
+    run_replay(
+        spark,
+        joined.writeStream.format("parquet")
+        .option("path", target)
+        .outputMode("append"),
+        f"{work}/ckpt",
+        timeout_s=180,
+        what="stream_stream_left_outer",
+    )
     return (
         spark.read.parquet(target)
         .where(F.col("user_id") >= 0)
@@ -9950,8 +9873,6 @@ def stream_drift_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     committed_rows is read from the TARGET, so at-least-once regressions
     or gate flips hash-fail; psi_e6, counts, and verdicts all replay in
     SQL from the same batch definitions."""
-    import os
-    import pathlib
     import tempfile
 
     from pyspark.sql.types import (
@@ -9981,8 +9902,7 @@ def stream_drift_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     work = tempfile.mkdtemp(prefix="sdrift_")
     feed = f"{work}/feed"
-    pathlib.Path(feed).mkdir()
-    payload = F.to_json(F.struct("event_id", "value")).alias("value")
+    payload = F.to_json(F.struct("event_id", "value"))
     parts = [
         ev.where(F.col("event_id") % 3 == 0),
         ev.where(F.col("event_id") % 3 == 1),
@@ -9991,13 +9911,7 @@ def stream_drift_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_id", (F.col("value") + 300.0).alias("value")
         ),
     ]
-    for i, p in enumerate(parts):
-        stage = f"{work}/stage{i}"
-        p.select(payload).coalesce(1).write.mode("overwrite").text(stage)
-        part = next(pathlib.Path(stage).glob("part-*"))
-        dest = pathlib.Path(feed) / f"b{i}.txt"
-        part.rename(dest)
-        os.utime(dest, (1_700_000_000 + i, 1_700_000_000 + i))
+    files = land_feed(feed, [p.select(payload) for p in parts])
 
     schema = StructType(
         [StructField("event_id", LongType()), StructField("value", DoubleType())]
@@ -10049,23 +9963,21 @@ def stream_drift_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"{target}/__batch_id={int(batch_id)}"
             )
 
-    with _replay_shuffle(spark):
-        q = (
-            stream.writeStream.foreachBatch(gate)
-            .option("checkpointLocation", f"{work}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        # replay a committed batch (b1 -> batch_id 1): the idempotent sink
-        # must leave the target byte-equivalent, or committed_rows drifts
-        replay = (
-            spark.read.format("text")
-            .load(f"{feed}/b1.txt")
-            .select(F.from_json("value", schema).alias("p"))
-            .select("p.event_id", "p.value")
-        )
-        gate(replay, 1)
+    run_replay(
+        spark,
+        stream.writeStream.foreachBatch(gate),
+        f"{work}/ckpt",
+        what="stream_drift_gate",
+    )
+    # replay a committed batch (file 1 -> batch_id 1): the idempotent sink
+    # must leave the target byte-equivalent, or committed_rows drifts
+    replay = (
+        spark.read.format("text")
+        .load(files[1])
+        .select(F.from_json("value", schema).alias("p"))
+        .select("p.event_id", "p.value")
+    )
+    gate(replay, 1)
     committed = (
         spark.read.option("basePath", target)
         .parquet(target)
@@ -10680,18 +10592,13 @@ def stream_session_eviction(spark: SparkSession, sf_dir: str) -> DataFrame:
     rule); the sentinels' own session never finalizes and never appears.
     """
     import json as _json
-    import os as _os
-    import pathlib
     import tempfile
 
     from pyspark.sql.types import LongType, StructField, StructType
 
     from ..catalog import load_events_raw
     from ..compat.protobuf_compat import ensure_protobuf_on_workers
-    from ..streaming.stateful_v2 import (
-        session_windows_tws,
-        use_rocksdb_state,
-    )
+    from ..streaming.stateful_v2 import ROCKSDB_PROVIDER, session_windows_tws
 
     if not ensure_protobuf_on_workers(spark):
         raise RuntimeError(
@@ -10701,43 +10608,29 @@ def stream_session_eviction(spark: SparkSession, sf_dir: str) -> DataFrame:
     bound = 1704240000 * 10**9  # 2024-01-03 00:00 UTC in nanos
     split = 1704153600 * 10**9  # 2024-01-02 00:00 UTC
     work = tempfile.mkdtemp(prefix="sess_tws_")
-    feed = pathlib.Path(work, "feed")
-    feed.mkdir()
+    feed = f"{work}/feed"
     halves = [
-        (F.col("ts") < split, "h0"),
-        ((F.col("ts") >= split) & (F.col("ts") < bound), "h1"),
+        F.col("ts") < split,
+        (F.col("ts") >= split) & (F.col("ts") < bound),
     ]
-    for i, (cond, name) in enumerate(halves):
-        stage = f"{work}/stage_{name}"
-        (
-            ev.where(cond)
-            .select(
-                F.to_json(
-                    F.struct(
-                        "user_id",
-                        F.expr("ts div 1000").alias("ts_us"),
-                    )
-                ).alias("value")
-            )
-            .coalesce(1)
-            .write.mode("overwrite")
-            .text(stage)
-        )
-        part = next(pathlib.Path(stage).glob("part-*"))
-        dest = feed / f"{name}.txt"
-        part.rename(dest)
-        _os.utime(dest, (1_700_000_000 + i, 1_700_000_000 + i))
     # sentinels: 2024-01-05 00:00 / 00:10 UTC — the watermark they push
     # (minus the 30-min delay) clears every real session's gap horizon,
     # but never their own
-    for i, (name, ts_us) in enumerate(
-        (("z1", 1704412800_000_000), ("z2", 1704413400_000_000)), start=2
-    ):
-        dest = feed / f"{name}.txt"
-        dest.write_text(
-            _json.dumps({"user_id": -1, "ts_us": ts_us}) + "\n"
-        )
-        _os.utime(dest, (1_700_000_000 + i, 1_700_000_000 + i))
+    land_feed(
+        feed,
+        [
+            ev.where(cond).select(
+                F.to_json(
+                    F.struct("user_id", F.expr("ts div 1000").alias("ts_us"))
+                )
+            )
+            for cond in halves
+        ]
+        + [
+            [_json.dumps({"user_id": -1, "ts_us": us})]
+            for us in (1704412800_000_000, 1704413400_000_000)
+        ],
+    )
 
     schema = StructType(
         [StructField("user_id", LongType()), StructField("ts_us", LongType())]
@@ -10745,7 +10638,7 @@ def stream_session_eviction(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = (
         spark.readStream.format("text")
         .option("maxFilesPerTrigger", "1")
-        .load(str(feed))
+        .load(feed)
         .select(F.from_json("value", schema).alias("p"))
         .select(
             F.col("p.user_id").alias("user_id"),
@@ -10754,37 +10647,24 @@ def stream_session_eviction(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withWatermark("ts", "30 minutes")
     )
-    prev_provider = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    use_rocksdb_state(spark)
     target = f"{work}/target"
-    try:
-        # n=8 pinned: unlike the machinery-bound replays (which sped up
-        # ~1.3-1.7x at n=2, r10 probe), this query does REAL per-partition
-        # Python state work (transformWithState session processor over
-        # every user's open sessions) — at n=2 that serializes into two
-        # tasks and measured 1.35x SLOWER (isolated interleaved min-of-5)
-        with _replay_shuffle(spark, 8):
-            out = session_windows_tws(
-                stream.groupBy("user_id"), gap_ms=3_600_000
-            )
-            q = (
-                out.writeStream.format("parquet")
-                .option("path", target)
-                .option("checkpointLocation", f"{work}/ckpt")
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(180)
-    finally:
-        if prev_provider is not None:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev_provider
-            )
-        else:  # was unset: unset again, or RocksDB leaks into the session
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    out = session_windows_tws(stream.groupBy("user_id"), gap_ms=3_600_000)
+    # n=8 pinned: unlike the machinery-bound replays (which sped up
+    # ~1.3-1.7x at n=2, r10 probe), this query does REAL per-partition
+    # Python state work (transformWithState session processor over
+    # every user's open sessions) — at n=2 that serializes into two
+    # tasks and measured 1.35x SLOWER (isolated interleaved min-of-5)
+    run_replay(
+        spark,
+        out.writeStream.format("parquet")
+        .option("path", target)
+        .outputMode("append"),
+        f"{work}/ckpt",
+        timeout_s=180,
+        what="stream_session_eviction",
+        n=8,
+        provider=ROCKSDB_PROVIDER,
+    )
     return (
         spark.read.parquet(target)
         .where(F.col("user_id") >= 0)
@@ -10882,8 +10762,6 @@ def stream_state_metrics_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract). Scale shape: the report is one row per (batch, operator)
     — KBs at any corpus size; the replay feed is sf-bounded."""
     import json as _json
-    import os as _os
-    import pathlib
     import tempfile
 
     from pyspark.sql.types import (
@@ -10894,8 +10772,7 @@ def stream_state_metrics_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     work = tempfile.mkdtemp(prefix="state_metrics_")
-    feed = pathlib.Path(work, "feed")
-    feed.mkdir()
+    feed = f"{work}/feed"
     ev = load_table(spark, sf_dir, "events").where(
         F.col("ts") < F.lit("2024-01-03 00:00:00").cast("timestamp")
     )
@@ -10905,40 +10782,30 @@ def stream_state_metrics_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("2024-01-02 00:00:00", "2024-01-02 12:00:00"),
         ("2024-01-02 12:00:00", "2024-01-03 00:00:00"),
     ]
-    for i, (lo, hi) in enumerate(bounds):
-        stage = f"{work}/stage_{i}"
-        (
+    # sentinels: 2024-01-03 01:00 / 01:10 UTC — z1's watermark covers every
+    # real window, z2 triggers the eviction batch; neither sentinel window
+    # ever finalizes (wm never reaches 02:00)
+    land_feed(
+        feed,
+        [
             ev.where(
                 (F.col("ts") >= F.lit(lo).cast("timestamp"))
                 & (F.col("ts") < F.lit(hi).cast("timestamp"))
-            )
-            .select(
+            ).select(
                 F.to_json(
                     F.struct(
                         F.col("event_type"),
                         F.unix_micros("ts").alias("ts_us"),
                     )
-                ).alias("value")
+                )
             )
-            .coalesce(1)
-            .write.mode("overwrite")
-            .text(stage)
-        )
-        part = next(pathlib.Path(stage).glob("part-*"))
-        dest = feed / f"b{i}.json"
-        part.rename(dest)
-        _os.utime(dest, (1_700_000_000 + i, 1_700_000_000 + i))
-    # sentinels: 2024-01-03 01:00 / 01:10 UTC — z1's watermark covers every
-    # real window, z2 triggers the eviction batch; neither sentinel window
-    # ever finalizes (wm never reaches 02:00)
-    for j, (name, us) in enumerate(
-        [("z1.json", 1704243600_000_000), ("z2.json", 1704244200_000_000)]
-    ):
-        p = feed / name
-        p.write_text(
-            _json.dumps({"event_type": "__sentinel", "ts_us": us}) + "\n"
-        )
-        _os.utime(p, (1_700_000_000 + 4 + j,) * 2)
+            for lo, hi in bounds
+        ]
+        + [
+            [_json.dumps({"event_type": "__sentinel", "ts_us": us})]
+            for us in (1704243600_000_000, 1704244200_000_000)
+        ],
+    )
     schema = StructType(
         [
             StructField("event_type", StringType()),
@@ -10948,7 +10815,7 @@ def stream_state_metrics_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = (
         spark.readStream.format("text")
         .option("maxFilesPerTrigger", "1")
-        .load(str(feed))
+        .load(feed)
         .select(F.from_json("value", schema).alias("p"))
         .select(
             F.col("p.event_type").alias("event_type"),
@@ -10959,17 +10826,15 @@ def stream_state_metrics_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
     n_files = len(bounds) + 2
-    with _replay_shuffle(spark):
-        q = (
-            stream.writeStream.format("parquet")
-            .option("path", f"{work}/target")
-            .option("checkpointLocation", f"{work}/ckpt")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        progress = list(q.recentProgress)
+    q = run_replay(
+        spark,
+        stream.writeStream.format("parquet")
+        .option("path", f"{work}/target")
+        .outputMode("append"),
+        f"{work}/ckpt",
+        what="stream_state_metrics_report",
+    )
+    progress = list(q.recentProgress)
     rows = []
     for p in progress:
         bid = int(p["batchId"])
@@ -11080,15 +10945,12 @@ def stream_windowed_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     KB-sized register blobs per window; rollups read the blobs, not the
     stream; the replay feed is sf-bounded."""
     import json as _json
-    import os as _os
-    import pathlib
     import tempfile
 
     from pyspark.sql.types import LongType, StructField, StructType
 
     work = tempfile.mkdtemp(prefix="hll_win_")
-    feed = pathlib.Path(work, "feed")
-    feed.mkdir()
+    feed = f"{work}/feed"
     ev = load_table(spark, sf_dir, "events").where(
         F.col("ts") < F.lit("2024-01-03 00:00:00").cast("timestamp")
     )
@@ -11096,41 +10958,33 @@ def stream_windowed_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("ts") < F.lit("2024-01-02 00:00:00").cast("timestamp"),
         F.col("ts") >= F.lit("2024-01-02 00:00:00").cast("timestamp"),
     ]
-    for i, cond in enumerate(halves):
-        stage = f"{work}/stage_{i}"
-        (
-            ev.where(cond)
-            .select(
+    # sentinels at 2024-01-03 02:00 / 02:10 UTC: z1's watermark (01:30)
+    # covers every real window end (max 01:00); neither sentinel's own
+    # windows (ends 03:00+) ever finalize
+    land_feed(
+        feed,
+        [
+            ev.where(cond).select(
                 F.to_json(
                     F.struct(
                         F.col("user_id"), F.unix_micros("ts").alias("ts_us")
                     )
-                ).alias("value")
+                )
             )
-            .coalesce(1)
-            .write.mode("overwrite")
-            .text(stage)
-        )
-        part = next(pathlib.Path(stage).glob("part-*"))
-        dest = feed / f"b{i}.json"
-        part.rename(dest)
-        _os.utime(dest, (1_700_000_000 + i,) * 2)
-    # sentinels at 2024-01-03 02:00 / 02:10 UTC: z1's watermark (01:30)
-    # covers every real window end (max 01:00); neither sentinel's own
-    # windows (ends 03:00+) ever finalize
-    for j, (name, us) in enumerate(
-        [("z1.json", 1704247200_000_000), ("z2.json", 1704247800_000_000)]
-    ):
-        p = feed / name
-        p.write_text(_json.dumps({"user_id": -1, "ts_us": us}) + "\n")
-        _os.utime(p, (1_700_000_000 + 2 + j,) * 2)
+            for cond in halves
+        ]
+        + [
+            [_json.dumps({"user_id": -1, "ts_us": us})]
+            for us in (1704247200_000_000, 1704247800_000_000)
+        ],
+    )
     schema = StructType(
         [StructField("user_id", LongType()), StructField("ts_us", LongType())]
     )
     stream = (
         spark.readStream.format("text")
         .option("maxFilesPerTrigger", "1")
-        .load(str(feed))
+        .load(feed)
         .select(F.from_json("value", schema).alias("p"))
         .select(
             F.col("p.user_id").alias("user_id"),
@@ -11142,16 +10996,14 @@ def stream_windowed_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("w.start").alias("ws"), "hll")
     )
     target = f"{work}/target"
-    with _replay_shuffle(spark):
-        q = (
-            stream.writeStream.format("parquet")
-            .option("path", target)
-            .option("checkpointLocation", f"{work}/ckpt")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
+    run_replay(
+        spark,
+        stream.writeStream.format("parquet")
+        .option("path", target)
+        .outputMode("append"),
+        f"{work}/ckpt",
+        what="stream_windowed_hll_distinct",
+    )
     blobs = spark.read.parquet(target)
     est = blobs.select(
         "ws", F.hll_sketch_estimate("hll").alias("est")

@@ -35,6 +35,7 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
 from ..functions.changelog import decode_debezium
+from .replay import drain
 
 
 @dataclass
@@ -234,10 +235,4 @@ def run_file_changelog_pipeline(
     would otherwise be silently truncated."""
     raw = file_source(spark, source_dir, cfg.max_files_per_trigger)
     q = start_changelog_stream(spark, raw, payload_schema, cfg)
-    q.awaitTermination(timeout_sec)
-    if q.isActive:
-        q.stop()
-        raise TimeoutError(
-            f"changelog pipeline {cfg.pipeline_id!r} still running after "
-            f"{timeout_sec}s; stopped with its output incomplete"
-        )
+    drain(q, timeout_sec, f"changelog pipeline {cfg.pipeline_id!r}")

@@ -6,7 +6,8 @@ idle keys expire without a custom timeout dance, and timer callbacks.
 
 Requires the RocksDB state store provider (the HDFS-backed default does
 not support transformWithState); callers flip the conf via
-``use_rocksdb_state``. The Python<->JVM state protocol additionally
+``use_rocksdb_state``, or pass ``ROCKSDB_PROVIDER`` to
+``replay.replay_conf``. The Python<->JVM state protocol additionally
 needs ``google.protobuf`` at runtime — ``compat.protobuf_compat``
 bridges the machine's public pure-Python runtime where no real install
 exists (importing this module arranges it, BEFORE the SparkSession is
@@ -44,11 +45,15 @@ OUTPUT_SCHEMA = StructType(
 _STATE_SCHEMA = StructType([StructField("events", LongType())])
 
 
+ROCKSDB_PROVIDER = (
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+)
+
+
 def use_rocksdb_state(spark: SparkSession) -> None:
     """transformWithState requires RocksDB-backed state."""
     spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+        "spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER
     )
 
 
