@@ -1,0 +1,52 @@
+package cdcengine.fs;
+
+import java.io.IOException;
+import java.net.URI;
+import java.net.URISyntaxException;
+import org.apache.hadoop.conf.Configuration;
+import org.apache.hadoop.fs.ChecksumFs;
+import org.apache.hadoop.fs.DelegateToFileSystem;
+import org.apache.hadoop.fs.FsConstants;
+import org.apache.hadoop.fs.FsServerDefaults;
+import org.apache.hadoop.fs.Path;
+import org.apache.hadoop.fs.local.LocalConfigKeys;
+
+/**
+ * The checksummed local {@code AbstractFileSystem} (the {@code FileContext}
+ * API, used by streaming checkpoints) over {@link NioRawLocalFileSystem}.
+ * Mirrors {@code LocalFs}/{@code RawLocalFs}, whose constructors are
+ * package-private.
+ */
+public class NioLocalFs extends ChecksumFs {
+  public NioLocalFs(URI uri, Configuration conf) throws IOException, URISyntaxException {
+    super(new Raw(conf));
+  }
+
+  static final class Raw extends DelegateToFileSystem {
+    Raw(Configuration conf) throws IOException, URISyntaxException {
+      super(FsConstants.LOCAL_FS_URI, new NioRawLocalFileSystem(), conf,
+          FsConstants.LOCAL_FS_URI.getScheme(), false);
+    }
+
+    @Override
+    public int getUriDefaultPort() {
+      return -1;
+    }
+
+    @Override
+    @Deprecated
+    public FsServerDefaults getServerDefaults() throws IOException {
+      return LocalConfigKeys.getServerDefaults();
+    }
+
+    @Override
+    public FsServerDefaults getServerDefaults(Path f) throws IOException {
+      return LocalConfigKeys.getServerDefaults();
+    }
+
+    @Override
+    public boolean isValidName(String src) {
+      return true;
+    }
+  }
+}

@@ -9,7 +9,9 @@ local-mode-specific except the default master fallback.
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 # Runtime-settable SQL confs applied to *any* session (including one handed
@@ -35,6 +37,34 @@ RUNTIME_CONFS: dict[str, str] = {
     # Arrow for any pandas_udf path (vectorized batches, not per-row pickle).
     "spark.sql.execution.arrow.pyspark.enabled": "true",
 }
+
+
+# Without libhadoop, Hadoop's local filesystem forks `chmod` for every
+# permission change and `readlink` for every link-status lookup: ~55 forks
+# of ~4-5 ms each per CDC micro-batch (checkpoint files, sink part files,
+# their .crc files). The jar built from jvm/src (scripts/build_nio_localfs.py)
+# makes both calls through java.nio inside the JVM; CRC files, the umask and
+# the checkpoint's rename-without-overwrite are unchanged.
+NIO_FS_JAR = str(Path(__file__).resolve().parent / "jvm" / "nio-localfs.jar")
+NIO_FS_CONFS: dict[str, str] = {
+    "spark.hadoop.fs.file.impl": "cdcengine.fs.NioLocalFileSystem",
+    "spark.hadoop.fs.AbstractFileSystem.file.impl": "cdcengine.fs.NioLocalFs",
+    "spark.driver.extraClassPath": NIO_FS_JAR,
+    "spark.executor.extraClassPath": NIO_FS_JAR,
+}
+
+
+def nio_fs_confs(gateway) -> dict[str, str]:
+    """The confs that install the NIO local filesystem in a session built
+    over ``gateway``'s JVM (None: no JVM yet, so the one about to start
+    gets the jar on its classpath). A JVM already running without the jar
+    gets none and keeps stock Hadoop: naming a class it cannot load would
+    fail every file operation."""
+    if gateway is not None and not gateway.jvm.org.apache.spark.util.Utils.classIsLoadable(
+        NIO_FS_CONFS["spark.hadoop.fs.file.impl"]
+    ):
+        return {}
+    return dict(NIO_FS_CONFS)
 
 
 _PKG_SHIPPED: dict[str, bool] = {}
@@ -99,7 +129,7 @@ def get_spark(
     master: str | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    """Build a tuned session.
+    """Build a tuned session on the NIO local filesystem (``nio_fs_confs``).
 
     ``shuffle_partitions`` defaults to the cpu count locally; on a real
     cluster you would size it to ~2-3x total cores and let AQE coalesce.
@@ -115,6 +145,6 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
     )
-    for k, v in RUNTIME_CONFS.items():
+    for k, v in {**RUNTIME_CONFS, **nio_fs_confs(SparkContext._gateway)}.items():
         builder = builder.config(k, v)
     return tune(builder.getOrCreate())

@@ -65,16 +65,16 @@ def run_with_recovery(
     """T12 auto-recovery: restart the stream on failure, up to
     `max_attempts` within a cooldown window (reference: 3 attempts / 300 s,
     cdc_health_monitor.py:29-31). Returns the error messages encountered;
-    re-raises when attempts are exhausted. The streaming checkpoint makes
-    restarts resume, not reprocess."""
+    re-raises when attempts are exhausted. A stream still running after
+    `await_sec` is stopped and raises `TimeoutError`. The streaming
+    checkpoint makes restarts resume, not reprocess."""
     errors: list[str] = []
     attempts = 0
     window_start = time.time()
     while True:
         q = start_query()
         try:
-            q.awaitTermination(await_sec) if await_sec else q.awaitTermination()
-            return errors  # clean termination
+            done = q.awaitTermination(await_sec) if await_sec else q.awaitTermination()
         except Exception as e:  # noqa: BLE001 — any stream failure
             errors.append(str(e))
             now = time.time()
@@ -83,3 +83,8 @@ def run_with_recovery(
             attempts += 1
             if attempts >= max_attempts:
                 raise
+            continue
+        if await_sec and not done:
+            q.stop()
+            raise TimeoutError(f"stream still running after {await_sec}s; stopped")
+        return errors  # clean termination

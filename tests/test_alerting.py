@@ -7,6 +7,7 @@ from cdc_application_febuary_spark.streaming.alerting import (
     alert_counts_by_severity,
     evaluate_rules,
 )
+from cdc_application_febuary_spark.streaming.replay import drain
 
 RULES_SCHEMA = (
     "rule_id long, rule_name string, pipeline_id string, metric string,"
@@ -134,7 +135,7 @@ def test_alert_history_sink_streaming(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    drain(q, 120, "alert history stream")
 
     rows = spark.read.parquet(hist).collect()
     fired = {(r["rule_id"], r["metric_value"]) for r in rows}

@@ -14,6 +14,7 @@ from cdc_application_febuary_spark.operators.ivm import (
     merge_state,
     refresh_groups,
 )
+from cdc_application_febuary_spark.streaming import replay
 
 
 CHANGELOG_SCHEMA = (
@@ -200,7 +201,7 @@ def test_live_stream_maintains_view_across_restart(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        replay.drain(q, 120, "ivm stream")
 
     write_feed("b1.json", BATCH1)
     drain()

@@ -25,6 +25,7 @@ from cdc_application_febuary_spark.sources.jdbc import (
     JdbcReadSpec,
     JdbcWriteSpec,
 )
+from cdc_application_febuary_spark.streaming.replay import drain
 
 
 def _specs(db: str, table: str, **read_kw):
@@ -146,7 +147,7 @@ def test_streaming_foreachbatch_jdbc_sink(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    drain(q, 120, "jdbc append stream")
     out = r.read(spark)
     assert out.count() == 30
     assert "__batch_id" in out.columns

@@ -18,6 +18,7 @@ from cdc_application_febuary_spark.sources.jdbc import (
 from cdc_application_febuary_spark.streaming.jdbc_txn_sink import (
     jdbc_exactly_once_sink,
 )
+from cdc_application_febuary_spark.streaming.replay import drain
 
 
 def _specs(db: str, table: str = "T_TGT"):
@@ -141,5 +142,5 @@ def test_streaming_foreachbatch_end_to_end(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    drain(q, 120, "jdbc txn sink stream")
     assert _state(spark, r) == {(1, "a"), (2, "b")}

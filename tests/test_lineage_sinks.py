@@ -118,6 +118,25 @@ def test_run_with_recovery_exhausts(spark):
         run_with_recovery(lambda: FakeQuery(), max_attempts=2, await_sec=1)
 
 
+def test_run_with_recovery_timeout_stops_and_raises():
+    """awaitTermination(timeout) returns False while the stream still runs:
+    that is a stall, not a clean end."""
+
+    class FakeQuery:
+        stopped = False
+
+        def awaitTermination(self, timeout=None):
+            return False
+
+        def stop(self):
+            self.stopped = True
+
+    q = FakeQuery()
+    with pytest.raises(TimeoutError):
+        run_with_recovery(lambda: q, max_attempts=3, await_sec=1)
+    assert q.stopped
+
+
 def test_reachable_distributed_branch_agrees_with_driver(spark):
     """A randomized 600-edge DAG walked by BOTH strategies — the
     driver-threshold=0 call forces the iterative-join branch, which must

@@ -5,6 +5,7 @@ from pyspark.sql import functions as F
 
 from cdc_application_febuary_spark.sources import manifest_table as mt
 from cdc_application_febuary_spark.streaming import manifest_sink as ms
+from cdc_application_febuary_spark.streaming.replay import drain
 
 
 def _batch(spark, ids, tag):
@@ -77,7 +78,7 @@ def test_stream_end_to_end_exactly_once(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        drain(q, 120, "manifest sink stream")
 
     run()
     assert mt.read_table(spark, t).count() == 2

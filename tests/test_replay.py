@@ -1,7 +1,8 @@
 """The file-stream replay harness (streaming/replay.py): feeds land in mtime
 order, a replay drains to the end or raises, and its confs are restored.
 Also: no query under queries/ waits on a stream itself, so every replay
-goes through the harness and none can return truncated output."""
+goes through the harness and none can return truncated output, and no test
+waits on a stream without checking how it ended."""
 
 import os
 import re
@@ -130,15 +131,39 @@ def test_replay_conf_restores_shuffle_and_provider(spark, monkeypatch):
                 spark.conf.set(k, v)
 
 
+def _waits(root, pattern):
+    """(path:line, next non-blank line) for each line of ``root``'s modules
+    matching ``pattern``."""
+    for path in sorted(root.rglob("*.py")):
+        lines = path.read_text().splitlines()
+        for n, line in enumerate(lines, 1):
+            if re.search(pattern, line):
+                after = next((x.strip() for x in lines[n:] if x.strip()), "")
+                yield f"{path.relative_to(ROOT)}:{n}", after
+
+
 def test_queries_never_await_a_stream_themselves():
     """A bare awaitTermination(timeout) returns on timeout and the query
     then reads partial output; queries drain through streaming/replay.py."""
-    calls = sorted(
-        f"{path.relative_to(ROOT)}:{n}"
-        for path in (ROOT / "cdc_application_febuary_spark" / "queries").rglob(
-            "*.py"
+    calls = [
+        where
+        for where, _ in _waits(
+            ROOT / "cdc_application_febuary_spark" / "queries",
+            r"\bawaitTermination\(",
         )
-        for n, line in enumerate(path.read_text().splitlines(), 1)
-        if re.search(r"\bawaitTermination\(", line)
-    )
+    ]
     assert not calls, "queries await streams directly:\n" + "\n".join(calls)
+
+
+def test_tests_never_wait_on_a_stream_unchecked():
+    """Under tests/, a stream drains through replay.drain, or its wait is
+    followed at once by the check that it ended cleanly; otherwise a stall
+    asserts on partial output. Fakes (``def awaitTermination``) are not
+    calls."""
+    checked = "assert not q.isActive and q.exception() is None"
+    calls = [
+        where
+        for where, after in _waits(ROOT / "tests", r"\.awaitTermination\(")
+        if after != checked
+    ]
+    assert not calls, "tests wait on streams unchecked:\n" + "\n".join(calls)

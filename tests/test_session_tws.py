@@ -14,6 +14,8 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
+from cdc_application_febuary_spark.streaming.replay import drain
+
 GAP_MS = 3_600_000  # 1 hour
 M = 60_000_000  # 1 minute in micros
 H = 60 * M
@@ -74,7 +76,7 @@ def _run_feed(spark, tmp_path, files):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        drain(q, 120, "session tws stream")
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
         if prev_provider is not None:

@@ -11,6 +11,7 @@ from cdc_application_febuary_spark.plans.snapshot import (
     StreamStartPlan,
     resolve_snapshot_mode,
 )
+from cdc_application_febuary_spark.streaming.replay import drain
 
 
 # --- decision matrix (cdc_manager.py:446-488 semantics) ---------------------
@@ -81,7 +82,7 @@ def _run_stateful(spark, feed_dir, ckpt, out_dir, op):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    drain(q, 120, "running counts stream")
 
 
 def test_running_counts_across_batches(spark, tmp_path):
@@ -140,7 +141,7 @@ def test_windowed_counts_with_watermark(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    drain(q, 120, "windowed counts stream")
     out = {
         (r["window_start"].hour, r["event_type"]): r["cnt"]
         for r in spark.sql("SELECT * FROM wc").collect()
@@ -180,7 +181,7 @@ def test_session_windowed_counts_streaming(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    drain(q, 120, "session window stream")
     got = {
         (r["user_id"], r["session_start"].isoformat(), r["session_end"].isoformat()): r["cnt"]
         for r in spark.sql("SELECT * FROM sw").collect()

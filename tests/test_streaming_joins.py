@@ -3,6 +3,8 @@ bounds; watermark-bounded in-stream dedup; stream x static enrichment."""
 
 import json
 
+from cdc_application_febuary_spark.streaming.replay import drain
+
 
 def _feed(path, rows):
     path.mkdir(parents=True, exist_ok=True)
@@ -41,7 +43,7 @@ def test_stream_stream_range_join(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    drain(q, 120, "stream-stream join")
     got = {(r["imp_id"], r["clk_id"]) for r in spark.sql("SELECT * FROM ssj").collect()}
     assert got == {(1, 10)}
 
@@ -64,7 +66,7 @@ def test_stream_dedup_within_watermark(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    drain(q, 120, "watermark dedup")
     rows = spark.sql("SELECT * FROM sdd").collect()
     assert sorted((r["k"], r["v"]) for r in rows) == [("a", 1), ("b", 3)]
 
@@ -88,7 +90,7 @@ def test_enrich_with_dimension_broadcasts(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    drain(q, 120, "stream-static enrichment")
     rows = {r["v"]: r["pipeline"] for r in spark.sql("SELECT * FROM enr").collect()}
     assert rows == {1: "pipeline-1", 2: None}
 
@@ -144,7 +146,7 @@ def test_running_counts_transform_with_state(spark, tmp_path):
                 .trigger(availableNow=True)
                 .start()
             )
-            q.awaitTermination(120)
+            drain(q, 120, "tws running counts")
             return {
                 r["key"]: (r["events"], r["batch_events"])
                 for r in spark.read.parquet(str(out_dir)).collect()
@@ -209,7 +211,7 @@ def test_stream_dedup_horizon_expiry_readmits(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    drain(q, 120, "horizon dedup")
     got = sorted((r["k"], r["v"]) for r in spark.sql("SELECT * FROM hdd").collect())
     assert ("a", 1) in got and ("w", 2) in got and ("z", 9) in got
     assert ("w", 4) not in got, "within-horizon duplicate leaked"
