@@ -1,12 +1,16 @@
-"""Changelog (CDC) semantics: Debezium envelope decode, op normalization,
-delete-rewrite — the single most load-bearing semantic in the reference,
-which implements it three times (`backend/ingestion/cdc_event_logger.py:446-467`,
+"""Changelog (CDC) semantics: Debezium envelope encode and decode, op
+normalization, delete-rewrite — the single most load-bearing semantic in the
+reference, which implements it three times
+(`backend/ingestion/cdc_event_logger.py:446-467`,
 `backend/ingestion/api.py:7847-7856`, `backend/ingestion/api.py:8937-8979`).
-Here it lives once, as pure column expressions (whole-stage-codegen friendly;
-no Python in the hot path).
+Here it lives once: the decoder as pure column expressions (whole-stage-codegen
+friendly; no Python in the hot path), and next to it the one encoder that
+authors change feeds.
 """
 
 from __future__ import annotations
+
+import json
 
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import (
@@ -70,6 +74,34 @@ def debezium_envelope_schema(payload_schema: StructType) -> StructType:
         ]
     )
     return StructType([StructField("payload", payload)])
+
+
+def debezium_envelope(
+    op: str,
+    before: dict | None,
+    after: dict | None,
+    ts_ms: int,
+    *,
+    table: str,
+    db: str,
+    schema: str,
+) -> str:
+    """One Debezium change message as a JSON line, the inverse of
+    ``decode_debezium``: ``before``/``after`` are row dicts (None where the
+    op has no image), and ``ts_ms`` stamps both the payload and its
+    source."""
+    source = {"ts_ms": ts_ms, "db": db, "schema": schema, "table": table}
+    return json.dumps(
+        {
+            "payload": {
+                "before": before,
+                "after": after,
+                "source": source,
+                "op": op,
+                "ts_ms": ts_ms,
+            }
+        }
+    )
 
 
 def decode_debezium(

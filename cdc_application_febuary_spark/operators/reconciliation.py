@@ -43,10 +43,10 @@ def validate_row_count(
 ) -> RowCountResult:
     s, t = source.count(), target.count()
     res = RowCountResult(s, t, s == t)
-    if not res.matches and raise_on_mismatch:
-        raise ReconciliationError(f"row count mismatch: source={s} target={t}")
     if s > 0 and t == 0 and raise_on_mismatch:
         raise ReconciliationError("zero-row paradox: transfer reported success but target is empty")
+    if not res.matches and raise_on_mismatch:
+        raise ReconciliationError(f"row count mismatch: source={s} target={t}")
     return res
 
 

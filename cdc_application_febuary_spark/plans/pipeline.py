@@ -45,8 +45,6 @@ def run_full_load(
     target_path: str,
     table: str,
     ts_column: str | None = None,
-    partition_by: list[str] | None = None,
-    repartition: int | None = None,
     snapshot_ts_ms: int | None = None,
 ) -> FullLoadResult:
     """Batch full load: stamp snapshot metadata (__op='r', __source_ts_ms,
@@ -66,12 +64,7 @@ def run_full_load(
         source,
         ts_ms=None if snapshot_ts_ms is None else F.lit(snapshot_ts_ms),
     )
-    if repartition:
-        stamped = stamped.repartition(repartition)
-    writer = stamped.write.mode("append")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(target_path)
+    stamped.write.mode("append").parquet(target_path)
 
     target = spark.read.parquet(target_path)
     count_res = validate_row_count(source, target.where(F.col("__op") == "r"))

@@ -1209,8 +1209,8 @@ FROM final WHERE NOT doc_dropped
 @_q("stream_quality_gate", _GATE_ORACLE)
 def stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C4 cleaning applied to a LIVE document stream (`operators/c4.py`
-    inside foreachBatch): the corpus replays as three JSON feed files
-    (maxFilesPerTrigger=1 -> three micro-batches), each batch runs the
+    inside foreachBatch): the corpus replays as three feed files (one
+    micro-batch each), each batch runs the
     full line+doc rule stack and appends only surviving documents to the
     target. The sink is idempotent per micro-batch (each batch overwrites
     its own ``__batch_id=N`` partition directory, the same discipline as
@@ -1223,40 +1223,15 @@ def stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     checksum all hash-compared."""
     import tempfile
 
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
     from ..operators.c4 import c4_line_filter
-    from ..streaming.replay import land_feed, run_replay
+    from ..streaming.replay import feed_stream, run_replay
 
     work = tempfile.mkdtemp(prefix="squality_")
-    feed = f"{work}/feed"
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    payload = F.to_json(F.struct("doc_id", "text"))
-    # landed in mtime order, so file i is micro-batch i — required below
-    # where the double-commit simulation replays batch 2 BY ID
-    files = land_feed(
-        feed,
-        [
-            docs.where(F.col("doc_id") % 3 == i).select(payload)
-            for i in range(3)
-        ],
-    )
-
-    schema = StructType(
-        [StructField("doc_id", LongType()), StructField("text", StringType())]
-    )
-    stream = (
-        spark.readStream.format("text")
-        .option("maxFilesPerTrigger", "1")
-        .load(feed)
-        .select(F.from_json("value", schema).alias("p"))
-        .select("p.doc_id", "p.text")
-    )
+    # part i is micro-batch i — required below, where the double-commit
+    # simulation replays batch 2 BY ID
+    parts = [docs.where(F.col("doc_id") % 3 == i) for i in range(3)]
+    stream = feed_stream(spark, f"{work}/feed", parts)
     target = f"{work}/target"
 
     def gate(batch_df, batch_id):
@@ -1279,17 +1254,11 @@ def stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"{work}/ckpt",
         what="stream_quality_gate",
     )
-    # Simulated double-commit: replay batch 2 (the third feed file)
+    # Simulated double-commit: replay batch 2 (the third feed part)
     # through the same sink with the SAME batch_id. The idempotent sink
     # overwrites the partition in place; the oracle-hashed aggregate below
     # therefore only matches if the replay did NOT change the target.
-    replay = (
-        spark.read.format("text")
-        .load(files[2])
-        .select(F.from_json("value", schema).alias("p"))
-        .select("p.doc_id", "p.text")
-    )
-    gate(replay, 2)
+    gate(parts[2], 2)
     return spark.read.parquet(target).drop("__batch_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs_kept"),
         F.sum("n_lines").cast("long").alias("n_lines"),

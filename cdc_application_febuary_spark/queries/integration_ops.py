@@ -11,12 +11,21 @@ in driver-visible columns, no ROUNDed double divisions.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..catalog import load_table
+from ..functions.changelog import debezium_envelope
 
 QUERIES: dict = {}
 ORACLES: dict = {}
+
+# the change feeds below are authored driver-side, as one source table's
+# Debezium envelopes
+_env = functools.partial(
+    debezium_envelope, table="customer", db="appdb", schema="public"
+)
 
 
 def _q(name: str, oracle: str | None = None):
@@ -755,7 +764,6 @@ def pipeline_lifecycle_runner(spark: SparkSession, sf_dir: str) -> DataFrame:
     the two-executor value verdict the Derby driver cannot. Same oracle
     as the Derby query: the two must agree with each other and with the
     fixture replay."""
-    import json as _json
     import tempfile
 
     from pyspark.sql.types import (
@@ -787,24 +795,6 @@ def pipeline_lifecycle_runner(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).collect()
     ]
 
-    def env(op, before, after, ts):
-        return _json.dumps(
-            {
-                "payload": {
-                    "before": before,
-                    "after": after,
-                    "source": {
-                        "ts_ms": ts,
-                        "db": "appdb",
-                        "schema": "public",
-                        "table": "customer",
-                    },
-                    "op": op,
-                    "ts_ms": ts,
-                }
-            }
-        )
-
     work = tempfile.mkdtemp(prefix="liferunner_")
     feed = f"{work}/feed"
     # three ticks: inserts, updates, deletes
@@ -812,12 +802,12 @@ def pipeline_lifecycle_runner(spark: SparkSession, sf_dir: str) -> DataFrame:
         feed,
         [
             [
-                env("c", None, {"k": k, "bal": bal, "segment": seg}, 2000)
+                _env("c", None, {"k": k, "bal": bal, "segment": seg}, 2000)
                 for k, bal, seg in rows
                 if k >= 150
             ],
             [
-                env(
+                _env(
                     "u",
                     {"k": k, "bal": bal, "segment": None},
                     {"k": k, "bal": bal + 1000.0, "segment": None},
@@ -827,7 +817,7 @@ def pipeline_lifecycle_runner(spark: SparkSession, sf_dir: str) -> DataFrame:
                 if k < 30
             ],
             [
-                env("d", {"k": k, "bal": bal, "segment": None}, None, 4000)
+                _env("d", {"k": k, "bal": bal, "segment": None}, None, 4000)
                 for k, bal, _ in rows
                 if k % 10 == 7 and k < 150
             ],
@@ -949,7 +939,6 @@ def multi_pipeline_concurrent(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle re-derives every number from the customer fixture. Scale
     shape: N pipelines = N streaming queries + N partition dirs; the
     report reads event-log metadata-sized aggregates, never refeeds."""
-    import json as _json
     import tempfile
 
     from pyspark.sql.types import (
@@ -974,24 +963,6 @@ def multi_pipeline_concurrent(spark: SparkSession, sf_dir: str) -> DataFrame:
         (int(r["c_custkey"]), float(r["c_acctbal"]))
         for r in cust.select("c_custkey", "c_acctbal").collect()
     ]  # bounded: < 120 keys at every SF
-
-    def env(op, before, after, ts):
-        return _json.dumps(
-            {
-                "payload": {
-                    "before": before,
-                    "after": after,
-                    "source": {
-                        "ts_ms": ts,
-                        "db": "appdb",
-                        "schema": "public",
-                        "table": "customer",
-                    },
-                    "op": op,
-                    "ts_ms": ts,
-                }
-            }
-        )
 
     # p1 owns keys [0, 60); p2 owns [60, 120) — same envelope grammar,
     # disjoint tenants
@@ -1023,11 +994,11 @@ def multi_pipeline_concurrent(spark: SparkSession, sf_dir: str) -> DataFrame:
                 feed,
                 [
                     [
-                        env("c", None, {"k": k, "bal": b}, 2000)
+                        _env("c", None, {"k": k, "bal": b}, 2000)
                         for k, b in s["keys"]
                     ],
                     [
-                        env(
+                        _env(
                             "u",
                             {"k": k, "bal": b},
                             {"k": k, "bal": b + s["delta"]},
@@ -1037,7 +1008,7 @@ def multi_pipeline_concurrent(spark: SparkSession, sf_dir: str) -> DataFrame:
                         if s["upd"](k)
                     ],
                     [
-                        env("d", {"k": k, "bal": b}, None, 4000)
+                        _env("d", {"k": k, "bal": b}, None, 4000)
                         for k, b in s["keys"]
                         if s["del"](k)
                     ],
@@ -1176,7 +1147,6 @@ def stream_backpressure_bounded_replay(
     fixture. Deltas are dyadic (100.0 / 50.0 / 25.0 / 7.25) so double
     arithmetic is bit-identical across engines; sums route through
     DECIMAL(18,2) per CLAUDE.md."""
-    import json as _json
     import tempfile
 
     from pyspark.sql.types import (
@@ -1201,24 +1171,6 @@ def stream_backpressure_bounded_replay(
         .collect()
     ]  # bounded: < 100 keys at every SF
 
-    def env(op, before, after, ts):
-        return _json.dumps(
-            {
-                "payload": {
-                    "before": before,
-                    "after": after,
-                    "source": {
-                        "ts_ms": ts,
-                        "db": "appdb",
-                        "schema": "public",
-                        "table": "customer",
-                    },
-                    "op": op,
-                    "ts_ms": ts,
-                }
-            }
-        )
-
     def bal2(k, b):
         return b + (100.0 if k % 3 == 0 else 0.0)
 
@@ -1229,17 +1181,17 @@ def stream_backpressure_bounded_replay(
     feed = f"{work}/feed"
     # insert, update, delete, update, late insert, late update
     land_feed(feed, [
-        [env("c", None, {"k": k, "bal": b}, 1000) for k, b in rows],
-        [env("u", {"k": k, "bal": b}, {"k": k, "bal": bal2(k, b)}, 2000)
+        [_env("c", None, {"k": k, "bal": b}, 1000) for k, b in rows],
+        [_env("u", {"k": k, "bal": b}, {"k": k, "bal": bal2(k, b)}, 2000)
          for k, b in rows if k % 3 == 0],
-        [env("d", {"k": k, "bal": bal2(k, b)}, None, 3000)
+        [_env("d", {"k": k, "bal": bal2(k, b)}, None, 3000)
          for k, b in rows if k % 7 == 0],
-        [env("u", {"k": k, "bal": bal2(k, b)},
+        [_env("u", {"k": k, "bal": bal2(k, b)},
              {"k": k, "bal": bal4(k, b)}, 4000)
          for k, b in rows if k % 5 == 1 and k % 7 != 0],
-        [env("c", None, {"k": k + 1000, "bal": b + 7.25}, 5000)
+        [_env("c", None, {"k": k + 1000, "bal": b + 7.25}, 5000)
          for k, b in rows if k % 11 == 0],
-        [env("u", {"k": k + 1000, "bal": b + 7.25},
+        [_env("u", {"k": k + 1000, "bal": b + 7.25},
              {"k": k + 1000, "bal": b + 7.25 + 25.0}, 6000)
          for k, b in rows if k % 11 == 0],
     ])

@@ -17,7 +17,7 @@ from ..functions import text as T
 from ..functions.changelog import is_deleted, normalize_op
 from ..functions.lsn import long_to_pg_lsn, pg_lsn_to_long
 from ..operators import dedup, lineage, multimodal, profiling, scd2, similarity
-from ..streaming.replay import land_feed, run_replay
+from ..streaming.replay import feed_stream, run_replay
 
 QUERIES: dict = {}
 ORACLES: dict = {}
@@ -2319,9 +2319,7 @@ def stateful_running_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", F.col("event_type").alias("key")
     )
     work = tempfile.mkdtemp(prefix="stateful_q_")
-    feed = f"{work}/feed"
-    land_feed(feed, [ev.select(F.to_json(F.struct("event_id", "key")))])
-    stream = spark.readStream.schema("event_id long, key string").json(feed)
+    stream = feed_stream(spark, f"{work}/feed", [ev])
     out_dir = f"{work}/out"
     run_replay(
         spark,
@@ -7973,9 +7971,9 @@ ORDER BY o.o_orderkey
 )
 def stream_join_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-static enrichment end-to-end: a deterministic change feed
-    (the first orders, as JSON change envelopes in a file feed — the
-    kafka twin) streams through a foreachBatch that broadcast-joins the
-    static customer dimension and appends to a parquet target; the query
+    (the first orders, landed as a file feed — the kafka twin) streams
+    through a foreachBatch that broadcast-joins the static customer
+    dimension and appends to a parquet target; the query
     returns the enriched target. The oracle is the equivalent static
     join — making this the one STREAMING query with a value-hash oracle,
     not just rows-only. Dimension is broadcast: no shuffle of the stream
@@ -7983,49 +7981,23 @@ def stream_join_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     work = tempfile.mkdtemp(prefix="stream_enrich_")
-    feed = f"{work}/feed"
     target = f"{work}/target"
     orders = load_table(spark, sf_dir, "orders").where(
         F.col("o_orderkey") < 120
     )
-    land_feed(
-        feed,
+    stream = feed_stream(
+        spark,
+        f"{work}/feed",
         [
             orders.select(
-                F.to_json(
-                    F.struct(
-                        "o_orderkey",
-                        "o_custkey",
-                        F.col("o_totalprice").cast("decimal(18,2)").alias(
-                            "amount"
-                        ),
-                    )
-                )
+                "o_orderkey",
+                "o_custkey",
+                F.col("o_totalprice").cast("decimal(18,2)").alias("amount"),
             )
         ],
     )
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_mktsegment"
-    )
-    from pyspark.sql.types import (
-        DecimalType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    env_schema = StructType(
-        [
-            StructField("o_orderkey", LongType()),
-            StructField("o_custkey", LongType()),
-            StructField("amount", DecimalType(18, 2)),
-        ]
-    )
-    stream = (
-        spark.readStream.format("text")
-        .load(feed)
-        .select(F.from_json("value", env_schema).alias("p"))
-        .select("p.*")
     )
 
     def enrich(batch: DataFrame, batch_id: int) -> None:
@@ -8302,56 +8274,25 @@ def stream_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..catalog import load_table
 
     work = tempfile.mkdtemp(prefix="stream_win_")
-    feed, target = f"{work}/feed", f"{work}/target"
+    target = f"{work}/target"
     ev = load_table(spark, sf_dir, "events").where(
         F.col("ts") < F.lit("2024-01-03 00:00:00").cast("timestamp")
     )
-    import json as _json
-
     # sentinels at 2024-01-03 01:00 and 01:10 UTC in epoch-micros: both
     # watermarks stay below their own window's end, so neither sentinel
     # window finalizes
-    land_feed(
-        feed,
-        [
-            ev.select(
-                F.to_json(
-                    F.struct(
-                        F.col("event_id"),
-                        F.col("event_type"),
-                        F.unix_micros("ts").alias("ts_us"),
-                    )
-                )
-            )
-        ]
-        + [
-            [_json.dumps({"event_id": -1, "event_type": "__sentinel",
-                          "ts_us": us})]
-            for us in (1704243600_000_000, 1704244200_000_000)
-        ],
-    )
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    schema = StructType(
-        [
-            StructField("event_id", LongType()),
-            StructField("event_type", StringType()),
-            StructField("ts_us", LongType()),
-        ]
-    )
     stream = (
-        spark.readStream.format("text")
-        .option("maxFilesPerTrigger", "1")
-        .load(feed)
-        .select(F.from_json("value", schema).alias("p"))
+        feed_stream(
+            spark,
+            f"{work}/feed",
+            [ev.select("event_type", F.unix_micros("ts").alias("ts_us"))]
+            + [
+                [("__sentinel", us)]
+                for us in (1704243600_000_000, 1704244200_000_000)
+            ],
+        )
         .select(
-            F.col("p.event_type").alias("event_type"),
-            F.timestamp_micros(F.col("p.ts_us")).alias("ts"),
+            "event_type", F.timestamp_micros(F.col("ts_us")).alias("ts")
         )
         .withWatermark("ts", "30 minutes")
         .groupBy(
@@ -8527,42 +8468,20 @@ def stateful_totals_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
             "no protobuf runtime available for transformWithState"
         )
     work = tempfile.mkdtemp(prefix="tws_q_")
-    feed, target = f"{work}/feed", f"{work}/target"
+    target = f"{work}/target"
     ev = load_table(spark, sf_dir, "events").where(
         F.col("ts") < F.lit("2024-01-02 00:00:00").cast("timestamp")
     )
-    # two files (event_id parity) -> two micro-batches
-    # (maxFilesPerTrigger=1): totals must accumulate across batches, not
-    # reset. Split explicitly: coalesce(2) over a one-partition input
-    # writes one file.
-    land_feed(
-        feed,
+    # two files (event_id parity) -> two micro-batches: totals must
+    # accumulate across batches, not reset. Split explicitly: coalesce(2)
+    # over a one-partition input writes one file.
+    stream = feed_stream(
+        spark,
+        f"{work}/feed",
         [
-            ev.where(F.col("event_id") % 2 == i).select(
-                F.to_json(F.struct("event_id", "event_type"))
-            )
+            ev.where(F.col("event_id") % 2 == i).select("event_type")
             for i in range(2)
         ],
-    )
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    schema = StructType(
-        [
-            StructField("event_id", LongType()),
-            StructField("event_type", StringType()),
-        ]
-    )
-    stream = (
-        spark.readStream.format("text")
-        .option("maxFilesPerTrigger", "1")
-        .load(feed)
-        .select(F.from_json("value", schema).alias("p"))
-        .select("p.event_type")
     )
     out = running_counts_tws(stream.groupBy(F.col("event_type")))
 
@@ -8625,52 +8544,23 @@ def stream_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     work = tempfile.mkdtemp(prefix="ss_join_")
     ev = load_table(spark, sf_dir, "events")
-    feeds = {}
-    for side, etype, ts_name in (
-        ("clicks", "click", "click_ts"),
-        ("buys", "purchase", "buy_ts"),
-    ):
-        path = f"{work}/{side}"
-        land_feed(
-            path,
+
+    def read_feed(etype: str, ts_name: str) -> DataFrame:
+        return feed_stream(
+            spark,
+            f"{work}/{etype}",
             [
                 ev.where(
                     (F.col("event_type") == etype)
                     & (F.col("event_id") % 2 == i)
-                ).select(
-                    F.to_json(
-                        F.struct(
-                            F.col("user_id"),
-                            F.unix_micros("ts").alias("ts_us"),
-                        )
-                    )
-                )
+                ).select("user_id", F.unix_micros("ts").alias("ts_us"))
                 for i in range(2)
             ],
-        )
-        feeds[side] = (path, ts_name)
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    schema = StructType(
-        [StructField("user_id", LongType()), StructField("ts_us", LongType())]
-    )
-
-    def read_feed(side: str) -> DataFrame:
-        path, ts_name = feeds[side]
-        return (
-            spark.readStream.format("text")
-            .option("maxFilesPerTrigger", "1")
-            .load(path)
-            .select(F.from_json("value", schema).alias("p"))
-            .select(
-                F.col("p.user_id").alias("user_id"),
-                F.timestamp_micros(F.col("p.ts_us")).alias(ts_name),
-            )
-        )
+        ).select("user_id", F.timestamp_micros("ts_us").alias(ts_name))
 
     joined = stream_stream_range_join(
-        read_feed("clicks"),
-        read_feed("buys"),
+        read_feed("click", "click_ts"),
+        read_feed("purchase", "buy_ts"),
         on=["user_id"],
         left_ts="click_ts",
         right_ts="buy_ts",
@@ -8731,41 +8621,20 @@ def stream_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.joins import stream_dedup
 
     work = tempfile.mkdtemp(prefix="sdedup_")
-    feed = f"{work}/feed"
     ev = load_table(spark, sf_dir, "events").select(
         "event_id",
         "event_type",
         F.unix_micros("ts").alias("ts_us"),
     )
-    payload = F.to_json(F.struct("event_id", "event_type", "ts_us"))
     # the originals, then the planted duplicates and triplicates
-    land_feed(
-        feed,
-        [ev.select(payload)]
-        + [
-            ev.where(F.col("event_id") % m == 0).select(payload)
-            for m in (3, 7)
-        ],
-    )
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    schema = StructType(
-        [
-            StructField("event_id", LongType()),
-            StructField("event_type", StringType()),
-            StructField("ts_us", LongType()),
-        ]
-    )
-    stream = (
-        spark.readStream.format("text")
-        .option("maxFilesPerTrigger", "1")
-        .load(feed)
-        .select(F.from_json("value", schema).alias("p"))
-        .select(
-            F.col("p.event_id").alias("event_id"),
-            F.col("p.event_type").alias("event_type"),
-            F.timestamp_micros(F.col("p.ts_us")).alias("ts"),
-        )
+    stream = feed_stream(
+        spark,
+        f"{work}/feed",
+        [ev] + [ev.where(F.col("event_id") % m == 0) for m in (3, 7)],
+    ).select(
+        "event_id",
+        "event_type",
+        F.timestamp_micros(F.col("ts_us")).alias("ts"),
     )
     deduped = stream_dedup(
         stream, keys=["event_id"], ts_col="ts", watermark="90 days"
@@ -9216,7 +9085,6 @@ def stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     sentinel files per SIDE (global watermark = min across sources)
     push the watermark past the horizon and trigger the flush batch;
     the sentinels' own clicks never finalize and never appear."""
-    import json as _json
     import tempfile
 
     from ..streaming.joins import stream_stream_range_join
@@ -9229,56 +9097,26 @@ def stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("ts") < F.lit("2024-01-04 00:00:00").cast("timestamp"),
         F.col("ts") >= F.lit("2024-01-04 00:00:00").cast("timestamp"),
     ]
-    feeds = {}
-    for side, etype, ts_name in (
-        ("clicks", "click", "click_ts"),
-        ("buys", "purchase", "buy_ts"),
-    ):
-        path = f"{work}/{side}"
+
+    def read_feed(etype: str, ts_name: str) -> DataFrame:
         # sentinels: 2024-01-12 00:00 and 00:10 UTC in epoch-micros —
         # neither advances far enough to finalize ITSELF (needs
         # watermark > own ts + 2h), so sentinel clicks never emit
-        land_feed(
-            path,
+        return feed_stream(
+            spark,
+            f"{work}/{etype}",
             [
                 ev.where((F.col("event_type") == etype) & cond).select(
-                    F.to_json(
-                        F.struct(
-                            F.col("user_id"),
-                            F.unix_micros("ts").alias("ts_us"),
-                        )
-                    )
+                    "user_id", F.unix_micros("ts").alias("ts_us")
                 )
                 for cond in halves
             ]
-            + [
-                [_json.dumps({"user_id": -1, "ts_us": us})]
-                for us in (1705017600_000_000, 1705018200_000_000)
-            ],
-        )
-        feeds[side] = (path, ts_name)
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    schema = StructType(
-        [StructField("user_id", LongType()), StructField("ts_us", LongType())]
-    )
-
-    def read_feed(side: str) -> DataFrame:
-        path, ts_name = feeds[side]
-        return (
-            spark.readStream.format("text")
-            .option("maxFilesPerTrigger", "1")
-            .load(path)
-            .select(F.from_json("value", schema).alias("p"))
-            .select(
-                F.col("p.user_id").alias("user_id"),
-                F.timestamp_micros(F.col("p.ts_us")).alias(ts_name),
-            )
-        )
+            + [[(-1, us)] for us in (1705017600_000_000, 1705018200_000_000)],
+        ).select("user_id", F.timestamp_micros("ts_us").alias(ts_name))
 
     joined = stream_stream_range_join(
-        read_feed("clicks"),
-        read_feed("buys"),
+        read_feed("click", "click_ts"),
+        read_feed("purchase", "buy_ts"),
         on=["user_id"],
         left_ts="click_ts",
         right_ts="buy_ts",
@@ -9875,13 +9713,6 @@ def stream_drift_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL from the same batch definitions."""
     import tempfile
 
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
     from ..catalog import load_events_raw
 
     ev = load_events_raw(spark, sf_dir).select("event_id", "value")
@@ -9901,8 +9732,6 @@ def stream_drift_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     tr = int(sum(r["nr"] for r in ref_rows))
 
     work = tempfile.mkdtemp(prefix="sdrift_")
-    feed = f"{work}/feed"
-    payload = F.to_json(F.struct("event_id", "value"))
     parts = [
         ev.where(F.col("event_id") % 3 == 0),
         ev.where(F.col("event_id") % 3 == 1),
@@ -9911,18 +9740,7 @@ def stream_drift_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_id", (F.col("value") + 300.0).alias("value")
         ),
     ]
-    files = land_feed(feed, [p.select(payload) for p in parts])
-
-    schema = StructType(
-        [StructField("event_id", LongType()), StructField("value", DoubleType())]
-    )
-    stream = (
-        spark.readStream.format("text")
-        .option("maxFilesPerTrigger", "1")
-        .load(feed)
-        .select(F.from_json("value", schema).alias("p"))
-        .select("p.event_id", "p.value")
-    )
+    stream = feed_stream(spark, f"{work}/feed", parts)
     target = f"{work}/target"
     summaries: dict[int, tuple[int, int]] = {}
 
@@ -9969,15 +9787,9 @@ def stream_drift_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"{work}/ckpt",
         what="stream_drift_gate",
     )
-    # replay a committed batch (file 1 -> batch_id 1): the idempotent sink
+    # replay a committed batch (part 1 -> batch_id 1): the idempotent sink
     # must leave the target byte-equivalent, or committed_rows drifts
-    replay = (
-        spark.read.format("text")
-        .load(files[1])
-        .select(F.from_json("value", schema).alias("p"))
-        .select("p.event_id", "p.value")
-    )
-    gate(replay, 1)
+    gate(parts[1], 1)
     committed = (
         spark.read.option("basePath", target)
         .parquet(target)
@@ -10591,10 +10403,7 @@ def stream_session_eviction(spark: SparkSession, sf_dir: str) -> DataFrame:
     (timers fire one batch after the watermark passes — the r5 eviction
     rule); the sentinels' own session never finalizes and never appears.
     """
-    import json as _json
     import tempfile
-
-    from pyspark.sql.types import LongType, StructField, StructType
 
     from ..catalog import load_events_raw
     from ..compat.protobuf_compat import ensure_protobuf_on_workers
@@ -10608,7 +10417,6 @@ def stream_session_eviction(spark: SparkSession, sf_dir: str) -> DataFrame:
     bound = 1704240000 * 10**9  # 2024-01-03 00:00 UTC in nanos
     split = 1704153600 * 10**9  # 2024-01-02 00:00 UTC
     work = tempfile.mkdtemp(prefix="sess_tws_")
-    feed = f"{work}/feed"
     halves = [
         F.col("ts") < split,
         (F.col("ts") >= split) & (F.col("ts") < bound),
@@ -10616,35 +10424,19 @@ def stream_session_eviction(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sentinels: 2024-01-05 00:00 / 00:10 UTC — the watermark they push
     # (minus the 30-min delay) clears every real session's gap horizon,
     # but never their own
-    land_feed(
-        feed,
-        [
-            ev.where(cond).select(
-                F.to_json(
-                    F.struct("user_id", F.expr("ts div 1000").alias("ts_us"))
-                )
-            )
-            for cond in halves
-        ]
-        + [
-            [_json.dumps({"user_id": -1, "ts_us": us})]
-            for us in (1704412800_000_000, 1704413400_000_000)
-        ],
-    )
-
-    schema = StructType(
-        [StructField("user_id", LongType()), StructField("ts_us", LongType())]
-    )
     stream = (
-        spark.readStream.format("text")
-        .option("maxFilesPerTrigger", "1")
-        .load(feed)
-        .select(F.from_json("value", schema).alias("p"))
-        .select(
-            F.col("p.user_id").alias("user_id"),
-            F.col("p.ts_us").alias("ts_us"),
-            F.timestamp_micros(F.col("p.ts_us")).alias("ts"),
+        feed_stream(
+            spark,
+            f"{work}/feed",
+            [
+                ev.where(cond).select(
+                    "user_id", F.expr("ts div 1000").alias("ts_us")
+                )
+                for cond in halves
+            ]
+            + [[(-1, us)] for us in (1704412800_000_000, 1704413400_000_000)],
         )
+        .withColumn("ts", F.timestamp_micros(F.col("ts_us")))
         .withWatermark("ts", "30 minutes")
     )
     target = f"{work}/target"
@@ -10761,7 +10553,6 @@ def stream_state_metrics_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark; its occurrence is config-dependent, so it is out of
     contract). Scale shape: the report is one row per (batch, operator)
     — KBs at any corpus size; the replay feed is sf-bounded."""
-    import json as _json
     import tempfile
 
     from pyspark.sql.types import (
@@ -10772,7 +10563,6 @@ def stream_state_metrics_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     work = tempfile.mkdtemp(prefix="state_metrics_")
-    feed = f"{work}/feed"
     ev = load_table(spark, sf_dir, "events").where(
         F.col("ts") < F.lit("2024-01-03 00:00:00").cast("timestamp")
     )
@@ -10785,41 +10575,24 @@ def stream_state_metrics_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sentinels: 2024-01-03 01:00 / 01:10 UTC — z1's watermark covers every
     # real window, z2 triggers the eviction batch; neither sentinel window
     # ever finalizes (wm never reaches 02:00)
-    land_feed(
-        feed,
-        [
-            ev.where(
-                (F.col("ts") >= F.lit(lo).cast("timestamp"))
-                & (F.col("ts") < F.lit(hi).cast("timestamp"))
-            ).select(
-                F.to_json(
-                    F.struct(
-                        F.col("event_type"),
-                        F.unix_micros("ts").alias("ts_us"),
-                    )
-                )
-            )
-            for lo, hi in bounds
-        ]
-        + [
-            [_json.dumps({"event_type": "__sentinel", "ts_us": us})]
-            for us in (1704243600_000_000, 1704244200_000_000)
-        ],
-    )
-    schema = StructType(
-        [
-            StructField("event_type", StringType()),
-            StructField("ts_us", LongType()),
-        ]
-    )
     stream = (
-        spark.readStream.format("text")
-        .option("maxFilesPerTrigger", "1")
-        .load(feed)
-        .select(F.from_json("value", schema).alias("p"))
+        feed_stream(
+            spark,
+            f"{work}/feed",
+            [
+                ev.where(
+                    (F.col("ts") >= F.lit(lo).cast("timestamp"))
+                    & (F.col("ts") < F.lit(hi).cast("timestamp"))
+                ).select("event_type", F.unix_micros("ts").alias("ts_us"))
+                for lo, hi in bounds
+            ]
+            + [
+                [("__sentinel", us)]
+                for us in (1704243600_000_000, 1704244200_000_000)
+            ],
+        )
         .select(
-            F.col("p.event_type").alias("event_type"),
-            F.timestamp_micros(F.col("p.ts_us")).alias("ts"),
+            "event_type", F.timestamp_micros(F.col("ts_us")).alias("ts")
         )
         .withWatermark("ts", "30 minutes")
         .groupBy(F.window("ts", "1 hour").alias("w"), F.col("event_type"))
@@ -10944,13 +10717,9 @@ def stream_windowed_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     window row fails the gate. Scale shape: state and shuffle carry only
     KB-sized register blobs per window; rollups read the blobs, not the
     stream; the replay feed is sf-bounded."""
-    import json as _json
     import tempfile
 
-    from pyspark.sql.types import LongType, StructField, StructType
-
     work = tempfile.mkdtemp(prefix="hll_win_")
-    feed = f"{work}/feed"
     ev = load_table(spark, sf_dir, "events").where(
         F.col("ts") < F.lit("2024-01-03 00:00:00").cast("timestamp")
     )
@@ -10961,35 +10730,19 @@ def stream_windowed_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sentinels at 2024-01-03 02:00 / 02:10 UTC: z1's watermark (01:30)
     # covers every real window end (max 01:00); neither sentinel's own
     # windows (ends 03:00+) ever finalize
-    land_feed(
-        feed,
-        [
-            ev.where(cond).select(
-                F.to_json(
-                    F.struct(
-                        F.col("user_id"), F.unix_micros("ts").alias("ts_us")
-                    )
-                )
-            )
-            for cond in halves
-        ]
-        + [
-            [_json.dumps({"user_id": -1, "ts_us": us})]
-            for us in (1704247200_000_000, 1704247800_000_000)
-        ],
-    )
-    schema = StructType(
-        [StructField("user_id", LongType()), StructField("ts_us", LongType())]
-    )
     stream = (
-        spark.readStream.format("text")
-        .option("maxFilesPerTrigger", "1")
-        .load(feed)
-        .select(F.from_json("value", schema).alias("p"))
-        .select(
-            F.col("p.user_id").alias("user_id"),
-            F.timestamp_micros(F.col("p.ts_us")).alias("ts"),
+        feed_stream(
+            spark,
+            f"{work}/feed",
+            [
+                ev.where(cond).select(
+                    "user_id", F.unix_micros("ts").alias("ts_us")
+                )
+                for cond in halves
+            ]
+            + [[(-1, us)] for us in (1704247200_000_000, 1704247800_000_000)],
         )
+        .select("user_id", F.timestamp_micros(F.col("ts_us")).alias("ts"))
         .withWatermark("ts", "30 minutes")
         .groupBy(F.window("ts", "2 hours", "1 hour").alias("w"))
         .agg(F.hll_sketch_agg(F.col("user_id"), F.lit(12)).alias("hll"))

@@ -106,11 +106,6 @@ def file_source(
     )
 
 
-def decoded_changelog(raw: DataFrame, payload_schema: StructType) -> DataFrame:
-    """Raw feed -> engine changelog rows (see functions.changelog)."""
-    return decode_debezium(raw, payload_schema)
-
-
 def _event_log_rows(batch: DataFrame, pipeline_id: str) -> DataFrame:
     """Shape a decoded micro-batch into `pipeline_runs`-style event-log rows
     (reference cdc_event_logger.py:514-537): one row per change event with
@@ -151,7 +146,7 @@ def start_changelog_stream(
     subset of them; every row is stamped `__batch_id`, so the replay of a
     failed batch is identifiable (idempotent consumers filter on max batch
     id per key; the reference settles for at-least-once, T2)."""
-    decoded = decoded_changelog(raw, payload_schema)
+    decoded = decode_debezium(raw, payload_schema)
     payload_cols = [f.name for f in payload_schema.fields]
 
     def sink(batch: DataFrame, batch_id: int) -> None:

@@ -12,6 +12,7 @@ from pyspark.sql.types import (
 )
 
 from cdc_application_febuary_spark.functions.changelog import (
+    debezium_envelope,
     decode_debezium,
     is_deleted,
     normalize_op,
@@ -87,6 +88,48 @@ def test_decode_debezium_insert_update_delete(spark):
     assert by_op["d"]["__deleted"] == "true"
     assert by_op["d"]["row"]["name"] == "b"
     assert by_op["c"]["source_table"] == "t"
+
+
+def test_debezium_envelope_round_trips_through_decode(spark):
+    """What the encoder writes, the decoder reads back: op, row (after, or
+    before for a delete), delete flag, source time and table, with null
+    before/after images kept null; a line that is no envelope comes back
+    flagged corrupt."""
+    cases = [
+        ("c", None, {"id": 1, "name": "a"}, 1000),
+        ("r", None, {"id": 2, "name": "b"}, 2000),
+        ("u", {"id": 1, "name": "a"}, {"id": 1, "name": "a2"}, 3000),
+        ("d", {"id": 2, "name": "b"}, None, 4000),
+    ]
+    lines = [
+        debezium_envelope(op, b, a, ts, table="t", db="d", schema="s")
+        for op, b, a, ts in cases
+    ]
+    raw = spark.createDataFrame([(v,) for v in lines + ["{oops"]], ["value"])
+    out = decode_debezium(raw, PAYLOAD).select(
+        "op",
+        "before",
+        "after",
+        "row",
+        "__deleted",
+        F.unix_millis("source_ts").alias("ts"),
+        "source_table",
+        "_corrupt",
+    )
+    rows = out.collect()
+    got = sorted(
+        (r["op"], *(r[c] and r[c].asDict() for c in ("before", "after", "row")))
+        + (r["__deleted"], r["ts"], r["source_table"], r["_corrupt"])
+        for r in rows
+        if not r["_corrupt"]
+    )
+    want = sorted(
+        (op, b, a, a or b, "true" if op == "d" else "false", ts, "t", False)
+        for op, b, a, ts in cases
+    )
+    assert got == want
+    bad = [(r["op"], r["row"], r["ts"]) for r in rows if r["_corrupt"]]
+    assert bad == [(None, None, None)]
 
 
 def test_stamp_full_load(spark):

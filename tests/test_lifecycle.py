@@ -3,11 +3,12 @@ the same SCD2 target -> current-state reflects both. The end-to-end story
 of the reference's `full_load_and_cdc` mode, plus the distributed-BFS and
 hot-shingle variants."""
 
-import json
+import functools
 
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
+from cdc_application_febuary_spark.functions.changelog import debezium_envelope
 from cdc_application_febuary_spark.plans.runner import (
     run_file_pipeline,
     target_current_state,
@@ -18,18 +19,7 @@ PAYLOAD = StructType(
 )
 
 
-def _env(op, before, after, ts_ms):
-    return json.dumps(
-        {
-            "payload": {
-                "before": before,
-                "after": after,
-                "source": {"ts_ms": ts_ms, "db": "d", "schema": "s", "table": "t"},
-                "op": op,
-                "ts_ms": ts_ms,
-            }
-        }
-    )
+_env = functools.partial(debezium_envelope, table="t", db="d", schema="s")
 
 
 def test_full_load_and_cdc_lifecycle(spark, tmp_path):

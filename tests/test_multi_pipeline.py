@@ -1,10 +1,9 @@
 """Multi-pipeline isolation and event-log partition pruning."""
 
-import json
-
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
+from cdc_application_febuary_spark.functions.changelog import debezium_envelope
 from cdc_application_febuary_spark.streaming.changelog_stream import (
     StreamConfig,
     file_source,
@@ -20,16 +19,8 @@ PAYLOAD = StructType(
 
 
 def _env(op, after, ts_ms):
-    return json.dumps(
-        {
-            "payload": {
-                "before": None,
-                "after": after,
-                "source": {"ts_ms": ts_ms, "db": "d", "schema": "s", "table": "t"},
-                "op": op,
-                "ts_ms": ts_ms,
-            }
-        }
+    return debezium_envelope(
+        op, None, after, ts_ms, table="t", db="d", schema="s"
     )
 
 

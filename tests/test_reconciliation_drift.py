@@ -32,6 +32,13 @@ def test_row_count_mismatch_raises(spark):
         validate_row_count(spark.range(10), spark.range(9))
 
 
+def test_empty_target_raises_zero_row_paradox(spark):
+    """A transfer that left the target empty gets the reference's own
+    error (transfer.py:902-931), not a generic count mismatch."""
+    with pytest.raises(ReconciliationError, match="zero-row paradox"):
+        validate_row_count(spark.range(10), spark.range(0))
+
+
 def test_empty_source_raises(spark):
     with pytest.raises(ReconciliationError, match="empty"):
         validate_source_non_empty(spark.range(0))

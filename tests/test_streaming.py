@@ -2,6 +2,7 @@
 dual-sink (SCD2 target + event log) with checkpoint resume, plus the
 monitoring listener."""
 
+import functools
 import json
 
 import pytest
@@ -9,6 +10,7 @@ from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
+from cdc_application_febuary_spark.functions.changelog import debezium_envelope
 from cdc_application_febuary_spark.operators.scd2 import current_state
 from cdc_application_febuary_spark.streaming.changelog_stream import (
     StreamConfig,
@@ -28,18 +30,7 @@ PAYLOAD = StructType(
 )
 
 
-def _envelope(op, before, after, ts_ms):
-    return json.dumps(
-        {
-            "payload": {
-                "before": before,
-                "after": after,
-                "source": {"ts_ms": ts_ms, "db": "d", "schema": "s", "table": "t"},
-                "op": op,
-                "ts_ms": ts_ms,
-            }
-        }
-    )
+_envelope = functools.partial(debezium_envelope, table="t", db="d", schema="s")
 
 
 def _write_feed(path, events):
