@@ -22,6 +22,8 @@ import os
 import sys
 from pathlib import Path
 
+from ..tempdirs import scratch_dir
+
 _SDK_ROOT = "/usr/lib/google-cloud-sdk/lib/third_party"
 _VENDOR = str(Path(__file__).resolve().parents[2] / "vendor" / "pbcompat")
 
@@ -97,13 +99,12 @@ def ensure_protobuf_on_workers(spark) -> bool:
     harmless when PYTHONPATH was already exported."""
     if not ensure_protobuf():
         return False
-    import tempfile
     import zipfile
 
     key = "bridge"
     zpath = _ZIP_CACHE.get(key)
     if zpath is None or not os.path.exists(zpath):
-        zdir = tempfile.mkdtemp(prefix="pbcompat_")
+        zdir = scratch_dir("pbcompat_")
         zpath = os.path.join(zdir, "pbcompat_bridge.zip")
         vendor = Path(_VENDOR)
         with zipfile.ZipFile(zpath, "w") as z:

@@ -48,12 +48,6 @@ def lsn_gap_bytes(source_lsn: Column, processed_lsn: Column) -> Column:
     return F.greatest(gap, F.lit(0).cast("long"))
 
 
-def lsn_gap_mb(source_lsn: Column, processed_lsn: Column) -> Column:
-    return (lsn_gap_bytes(source_lsn, processed_lsn) / F.lit(1024.0 * 1024.0)).alias(
-        "gap_mb"
-    )
-
-
 def sqlserver_lsn_to_long(lsn: Column | str) -> Column:
     """SQL Server LSN ``file:slot:op`` hex triple -> orderable long
     (reference format: `connectors/sqlserver.py:2521-2677`). The three parts

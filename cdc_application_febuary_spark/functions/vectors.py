@@ -70,13 +70,3 @@ def cosine_pairs(a: Column, b: Column) -> Column:
 
         _cosine_pairs_udf = _udf
     return _cosine_pairs_udf(a, b)
-
-
-def l2_distance(a: Column, b: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(_d(a), _d(b), lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )

@@ -91,17 +91,6 @@ def null_profile(df: DataFrame) -> DataFrame:
     return stacked.select("p.*")
 
 
-def top_values(df: DataFrame, column: str, k: int = 10) -> DataFrame:
-    """Top-k frequent values for one column
-    (reference sqlserver.py:1971-1986)."""
-    return (
-        df.groupBy(F.col(column).cast("string").alias("value"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .orderBy(F.col("cnt").desc(), F.col("value").asc())
-        .limit(k)
-    )
-
-
 def top_values_all_columns(df: DataFrame, columns=None, k: int = 10) -> DataFrame:
     """Top-k per column in ONE job: unpivot columns to (column, value) rows,
     aggregate, window-rank within column."""

@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from .drift import ColumnChange, diff_schemas
 from .reconciliation import validate_row_count, validate_schema
+from .scd2 import SCD2_META_COLS
 
 
 @dataclass
@@ -45,8 +46,7 @@ def data_quality_report(source: DataFrame, target: DataFrame) -> QualityReport:
     dropping values — the failure `validate_data_integrity` samples for)."""
     counts = validate_row_count(source, target, raise_on_mismatch=False)
     schema = validate_schema(source, target)
-    meta = {"__op", "__source_ts_ms", "__deleted", "row_id", "__batch_id"}
-    target_cmp = target.drop(*[c for c in target.columns if c in meta])
+    target_cmp = target.drop(*[c for c in target.columns if c in SCD2_META_COLS])
     drift = diff_schemas(source.schema, target_cmp.schema)
 
     shared = [c for c in source.columns if c in set(target_cmp.columns)]

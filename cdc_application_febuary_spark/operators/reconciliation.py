@@ -5,16 +5,17 @@ ops instead of driver-side COUNT round-trips:
   * validate_source_data   (validation.py:16-96)   -> non-empty check
   * validate_target_row_count (validation.py:97-193) -> count parity
   * validate_target_schema (validation.py:196-295)  -> column-set parity
-  * validate_data_integrity (validation.py:298-400) -> row-level sample diff
+  * validate_data_integrity (validation.py:298-400) -> row_level_diff
   * zero-row paradox        (transfer.py:902-931)   -> transferred-but-empty
 """
 
 from __future__ import annotations
 
-import functools
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, functions as F
+
+from .scd2 import SCD2_META_COLS
 
 
 class ReconciliationError(AssertionError):
@@ -52,9 +53,9 @@ def validate_row_count(
 
 def validate_schema(source: DataFrame, target: DataFrame, ignore_meta: bool = True) -> dict:
     """Column-set diff (added/removed/type-changed) — validation.py:196-295.
-    Target SCD2 metadata columns (__op, __source_ts_ms, __deleted, row_id)
-    are excluded by default."""
-    meta = {"__op", "__source_ts_ms", "__deleted", "row_id"} if ignore_meta else set()
+    Target SCD2 metadata columns (`scd2.SCD2_META_COLS`) are excluded by
+    default."""
+    meta = SCD2_META_COLS if ignore_meta else frozenset()
     s = {f.name: f.dataType.simpleString() for f in source.schema.fields}
     t = {
         f.name: f.dataType.simpleString()
@@ -92,27 +93,3 @@ def row_level_diff(
         .otherwise(F.lit("source_only"))
         .alias("side"),
     )
-
-
-def sample_integrity_check(
-    source: DataFrame, target: DataFrame, key_cols: list[str], n: int = 100
-) -> dict:
-    """Reference-shaped sample check: join N source rows to target on key and
-    compare shared columns; returns mismatch count per column."""
-    shared = [
-        c
-        for c in source.columns
-        if c in set(target.columns) and c not in key_cols
-    ]
-    s = source.orderBy(*key_cols).limit(n).alias("s")
-    t = target.alias("t")
-    on = [F.col(f"s.{k}") == F.col(f"t.{k}") for k in key_cols]
-    joined = s.join(t, functools.reduce(lambda a, b: a & b, on), "left")
-    aggs = [
-        F.sum(
-            (~F.col(f"s.{c}").eqNullSafe(F.col(f"t.{c}"))).cast("long")
-        ).alias(c)
-        for c in shared
-    ]
-    row = joined.agg(*aggs).collect()[0]
-    return {c: row[c] for c in shared}

@@ -14,6 +14,13 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from ..functions.changelog import is_deleted, normalize_op
 
+# Metadata columns an SCD2 target carries beside the payload: the surrogate
+# key, the op/commit-time/delete stamps, and the change path's micro-batch
+# id. Schema-parity and quality checks compare payload columns only.
+SCD2_META_COLS = frozenset(
+    {"row_id", "__op", "__source_ts_ms", "__deleted", "__batch_id"}
+)
+
 
 def to_scd2_rows(
     changelog: DataFrame,

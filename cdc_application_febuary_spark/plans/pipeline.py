@@ -1,10 +1,9 @@
-"""Pipeline orchestration: the reference's pipeline lifecycle
-(`cdc_manager.py:194-1290`, SURVEY §3 entry point 1) as Spark jobs.
+"""Batch full load: the snapshot half of the reference's pipeline
+lifecycle (`cdc_manager.py:194-1290`, SURVEY §3 entry point 1) as Spark jobs.
 
-Modes mirror the reference (models.py:163-268):
-  * full_load_only      -> batch snapshot with __op='r' stamping
-  * cdc_only            -> streaming change path from the current offset
-  * full_load_and_cdc   -> snapshot, capture offset, then stream from it
+Which of the full load and the change stream a pipeline runs is decided
+once, by `plans.snapshot.resolve_snapshot_mode`; `plans.runner` executes
+that plan.
 
 The snapshot-to-stream handoff (reference LSN capture,
 cdc_manager.py:1578-1589) maps to: record the max source timestamp / file
@@ -88,47 +87,3 @@ def run_full_load(
             "schema": schema_res["matches"],
         },
     )
-
-
-@dataclass
-class PipelineSpec:
-    """A pipeline definition (reference models.py:163-268): source tables ->
-    target paths + mode."""
-
-    pipeline_id: str
-    mode: str = "full_load_and_cdc"  # full_load_only | cdc_only | full_load_and_cdc
-    tables: list[str] = field(default_factory=list)
-    target_root: str = ""
-    checkpoint_root: str = ""
-
-    def target_path(self, table: str) -> str:
-        return f"{self.target_root.rstrip('/')}/{table}"
-
-    def checkpoint_dir(self, table: str) -> str:
-        return f"{self.checkpoint_root.rstrip('/')}/{table}"
-
-
-def run_pipeline_full_loads(
-    spark: SparkSession,
-    spec: PipelineSpec,
-    sources: dict[str, DataFrame],
-    ts_columns: dict[str, str] | None = None,
-) -> list[FullLoadResult]:
-    """Full-load every table in the spec. Tables run sequentially like the
-    reference (transfer.py:331-358) but each table's load is internally
-    parallel; at scale you submit tables as concurrent Spark jobs instead."""
-    if spec.mode == "cdc_only":
-        return []
-    ts_columns = ts_columns or {}
-    results = []
-    for table in spec.tables:
-        results.append(
-            run_full_load(
-                spark,
-                sources[table],
-                spec.target_path(table),
-                table,
-                ts_column=ts_columns.get(table),
-            )
-        )
-    return results

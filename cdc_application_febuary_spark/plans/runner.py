@@ -4,20 +4,20 @@
       streaming change path appends into the SAME SCD2 target ->
         current-state view reflects snapshot + changes
 
-This runner wires `plans.pipeline` (batch), `plans.snapshot` (decision
-matrix) and `streaming.changelog_stream` (change path) over file-based
-sources — the lakehouse shape; Kafka/JDBC swap in via the source/sink
-specs without touching the flow.
+This runner executes the start plan `plans.snapshot` resolves once per
+start — `plans.pipeline` (batch full load) and `streaming.changelog_stream`
+(change path) run exactly when the plan says, over file-based sources —
+the lakehouse shape; Kafka/JDBC swap in via the source/sink specs without
+touching the flow.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-from ..operators.scd2 import current_state
 from ..streaming.changelog_stream import StreamConfig, run_file_changelog_pipeline
 from .pipeline import FullLoadResult, run_full_load
 from .snapshot import StreamStartPlan, resolve_snapshot_mode
@@ -70,9 +70,8 @@ def plan_connected_pipeline(
 
     if not isinstance(connection, SourceConnection):
         raise TypeError("plan_connected_pipeline requires a SourceConnection")
-    engine = connection.database_type
     plan = resolve_snapshot_mode(
-        engine,
+        connection.database_type,
         mode,
         full_load_completed=full_load_lsn is not None,
         has_captured_offset=full_load_lsn is not None,
@@ -83,18 +82,14 @@ def plan_connected_pipeline(
         database,
         schema,
         tables,
-        full_load_lsn=full_load_lsn,
         snapshot_mode=plan.snapshot_mode,
         kafka_bootstrap=kafka_bootstrap,
     )
-    topics = [
-        topic_for(pipeline_id, schema, t, database=database if engine == "sqlserver" else None)
-        for t in tables
-    ]
+    topic_db = database if plan.engine == "sqlserver" else None
     return ConnectedPipelinePlan(
         connector_config=cfg,
-        topics=topics,
-        subscribe_pattern=topic_pattern(pipeline_id, engine),
+        topics=[topic_for(pipeline_id, schema, t, database=topic_db) for t in tables],
+        subscribe_pattern=topic_pattern(pipeline_id, plan.engine),
         starting_offsets=plan.starting_offsets,
         stream_plan=plan,
     )
@@ -129,15 +124,15 @@ def run_connected_pipeline(
         tables=tables,
         mode=mode,
     )
-    result = run_file_pipeline(
+    result = _run_plan(
         spark,
+        plan.stream_plan,
+        mode,
         pipeline_id=pipeline_id,
         source=source,
         changelog_dir=changelog_dir,
         payload_schema=payload_schema,
         work_root=work_root,
-        engine=connection.database_type,
-        mode=mode,
         stream_timeout_sec=stream_timeout_sec,
         snapshot_ts_ms=snapshot_ts_ms,
     )
@@ -160,16 +155,42 @@ def run_file_pipeline(
     """Run one table's pipeline: optional snapshot, then drain the change
     feed (availableNow) into the same SCD2 target under a checkpoint.
     Raises ``TimeoutError`` if the drain outlasts ``stream_timeout_sec``."""
-    target = f"{work_root.rstrip('/')}/target"
-    plan = resolve_snapshot_mode(
-        engine,
+    return _run_plan(
+        spark,
+        resolve_snapshot_mode(
+            engine, mode, full_load_completed=False, has_captured_offset=False
+        ),
         mode,
-        full_load_completed=False,
-        has_captured_offset=False,
+        pipeline_id=pipeline_id,
+        source=source,
+        changelog_dir=changelog_dir,
+        payload_schema=payload_schema,
+        work_root=work_root,
+        stream_timeout_sec=stream_timeout_sec,
+        snapshot_ts_ms=snapshot_ts_ms,
     )
 
+
+def _run_plan(
+    spark: SparkSession,
+    plan: StreamStartPlan,
+    mode: str,
+    *,
+    pipeline_id: str,
+    source: DataFrame | None,
+    changelog_dir: str,
+    payload_schema: StructType,
+    work_root: str,
+    stream_timeout_sec: int,
+    snapshot_ts_ms: int | None,
+) -> PipelineRunResult:
+    """Execute a resolved start plan: the full load if the plan runs one,
+    then the change stream if the plan runs one."""
+    root = work_root.rstrip("/")
+    target = f"{root}/target"
+
     fl: FullLoadResult | None = None
-    if plan.run_full_load and mode != "cdc_only":
+    if plan.run_full_load:
         if source is None:
             raise ValueError("full load requires a source")
         from ..sources.typemap import conform_to_schema
@@ -185,31 +206,18 @@ def run_file_pipeline(
         )
         # offset captured -> re-resolve: stream starts without re-snapshot
         plan = resolve_snapshot_mode(
-            engine, mode, full_load_completed=True, has_captured_offset=True
+            plan.engine, mode, full_load_completed=True, has_captured_offset=True
         )
 
-    cfg = StreamConfig(
-        pipeline_id=pipeline_id,
-        target_path=target,
-        event_log_path=f"{work_root.rstrip('/')}/event_log",
-        checkpoint_dir=f"{work_root.rstrip('/')}/checkpoint",
-        trigger={"availableNow": True},
-    )
-    run_file_changelog_pipeline(
-        spark, changelog_dir, payload_schema, cfg, timeout_sec=stream_timeout_sec
-    )
+    if plan.run_stream:
+        cfg = StreamConfig(
+            pipeline_id=pipeline_id,
+            target_path=target,
+            event_log_path=f"{root}/event_log",
+            checkpoint_dir=f"{root}/checkpoint",
+            trigger={"availableNow": True},
+        )
+        run_file_changelog_pipeline(
+            spark, changelog_dir, payload_schema, cfg, timeout_sec=stream_timeout_sec
+        )
     return PipelineRunResult(full_load=fl, stream_plan=plan, target_path=target)
-
-
-def target_current_state(
-    spark: SparkSession, target_path: str, key_cols: list[str]
-) -> DataFrame:
-    """Current-state view over a pipeline target that mixes full-load rows
-    (__op='r') and streamed change rows — ordered by source commit time.
-
-    Full-load rows carry a load-time ``__source_ts_ms``; streamed rows carry
-    the source commit ``ts_ms``. Change events for a key always supersede
-    the snapshot row (a change observed after the captured offset has a
-    later commit ts), so plain commit-time ordering is correct."""
-    df = spark.read.parquet(target_path)
-    return current_state(df, key_cols, order_cols=["__source_ts_ms"])

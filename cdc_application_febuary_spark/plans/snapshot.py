@@ -1,4 +1,4 @@
-"""Snapshot-mode decision matrix and stream-start planning.
+"""How a pipeline starts: the one owner of the snapshot-to-stream decision.
 
 The reference resolves how a pipeline transitions from full load to
 streaming per engine (`cdc_manager.py:446-488` + per-engine remaps in
@@ -13,22 +13,40 @@ streaming per engine (`cdc_manager.py:446-488` + per-engine remaps in
 
 In the Spark engine "snapshot" is the batch full-load job and "never"
 means the streaming query starts at the captured offset; the matrix
-becomes a plan decision: (run_full_load?, startingOffsets)."""
+becomes a plan decision: (run_full_load?, startingOffsets, run_stream?).
+
+Every consumer reads the resolved `StreamStartPlan` and decides nothing
+itself: the connector config writes `snapshot_mode` verbatim, the runner
+runs the full load and the stream as the plan says, and topic naming
+reads the normalized `engine`. Engine aliases and mode names live here
+and nowhere else (`tests/test_single_owner.py` enforces it)."""
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
 ENGINES = ("postgresql", "sqlserver", "oracle", "db2", "as400", "snowflake", "s3")
+_ALIASES = {"mssql": "sqlserver", "ibm_i": "as400"}
+MODES = ("full_load_and_cdc", "full_load_only", "cdc_only")
+
+
+def normalize_engine(engine: str) -> str:
+    """Canonical engine name (aliases resolved); unknown engines raise."""
+    e = engine.lower()
+    e = _ALIASES.get(e, e)
+    if e not in ENGINES:
+        raise ValueError(f"unknown engine {e!r}")
+    return e
 
 
 @dataclass
 class StreamStartPlan:
-    engine: str
+    engine: str                 # normalized engine name
     snapshot_mode: str          # never | initial | initial_only | schema_only
     run_full_load: bool         # engine-side batch snapshot job
     starting_offsets: str       # kafka startingOffsets value
     reason: str
+    run_stream: bool            # full_load_only never starts the change stream
 
 
 def resolve_snapshot_mode(
@@ -38,12 +56,15 @@ def resolve_snapshot_mode(
     has_captured_offset: bool,
 ) -> StreamStartPlan:
     """Port of the decision matrix (semantics, not code — see module doc)."""
-    engine = engine.lower()
-    if engine not in ENGINES:
-        raise ValueError(f"unknown engine {engine!r}")
+    engine = normalize_engine(engine)
+    if mode not in MODES:
+        raise ValueError(f"unknown pipeline mode {mode!r}")
+    run_stream = mode != "full_load_only"
 
     def plan(snapshot_mode: str, run_fl: bool, offsets: str, reason: str):
-        return StreamStartPlan(engine, snapshot_mode, run_fl, offsets, reason)
+        return StreamStartPlan(
+            engine, snapshot_mode, run_fl, offsets, reason, run_stream
+        )
 
     if mode == "cdc_only":
         base = plan("never", False, "latest", "cdc_only skips snapshot")

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..catalog import load_table
+from ..tempdirs import scratch_dir
 
 QUERIES: dict = {}
 ORACLES: dict = {}
@@ -1221,12 +1222,10 @@ def stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-fails the gate. The final target must value-equal the batch SQL
     replay of the same filter — kept-doc count, line counters, and an id
     checksum all hash-compared."""
-    import tempfile
-
     from ..operators.c4 import c4_line_filter
     from ..streaming.replay import feed_stream, run_replay
 
-    work = tempfile.mkdtemp(prefix="squality_")
+    work = scratch_dir("squality_")
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     # part i is micro-batch i — required below, where the double-commit
     # simulation replays batch 2 BY ID
@@ -1741,8 +1740,6 @@ def incremental_line_dedup_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exactly-once manifest commit must no-op (marker row 99). Each
     batch admits exactly the line keys first seen in it; the store ends
     at the global distinct-line count."""
-    import tempfile
-
     from ..operators.linededup import line_dedup_batch
     from ..sources import manifest_table as mt
 
@@ -1750,7 +1747,7 @@ def incremental_line_dedup_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "text", "source"
     )
     lined = _line_dedup_lines(docs)
-    store = tempfile.mkdtemp(prefix="line_store_") + "/lines"
+    store = scratch_dir("line_store_") + "/lines"
     rows = []
     for b in range(3):
         rep = line_dedup_batch(

@@ -17,6 +17,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..catalog import load_table
 from ..functions.changelog import debezium_envelope
+from ..operators.scd2 import current_state
+from ..tempdirs import scratch_dir
 
 QUERIES: dict = {}
 ORACLES: dict = {}
@@ -336,7 +338,6 @@ def type_inference_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     mapping, int+float widening, and the null+int conflict (the reference
     rule widens to string; Spark's inference ignores nulls -> bigint)."""
     import json
-    import tempfile
 
     from ..sources.files import infer_json_schema, read_json_objects
 
@@ -360,7 +361,7 @@ def type_inference_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             "mixed": i if i % 2 == 0 else i + 0.5,
         }
         lines.append(json.dumps(rec))
-    work = tempfile.mkdtemp(prefix="infer_")
+    work = scratch_dir("infer_")
     obj = f"{work}/orders_sample.json"
     with open(obj, "w") as f:
         f.write("\n".join(lines) + "\n")
@@ -416,9 +417,8 @@ def pipeline_lifecycle_derby(spark: SparkSession, sf_dir: str) -> DataFrame:
     asserted inline. Oracle reproduces the surviving state from the
     customer fixture."""
     import re
-    import tempfile
 
-    from ..operators.scd2 import current_state, to_scd2_rows
+    from ..operators.scd2 import to_scd2_rows
     from ..plans.runner import plan_connected_pipeline
     from ..sources import evolution as ev
     from ..sources import manifest_table as mt
@@ -443,7 +443,7 @@ def pipeline_lifecycle_derby(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not all(re.fullmatch(plan.subscribe_pattern, t) for t in plan.topics):
         raise RuntimeError("subscribe pattern must cover every generated topic")
 
-    work = tempfile.mkdtemp(prefix="lifederby_")
+    work = scratch_dir("lifederby_")
     db, target = f"{work}/db", f"{work}/target"
     common = dict(
         engine="derby", host="", port=0, database=db, user="app",
@@ -551,11 +551,9 @@ def object_listing_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     through `files.list_objects` (the reference's objects-as-tables
     listing, s3.py:567-633), and report key / byte size / derived table
     name. The oracle recomputes each key and size from the nation fixture."""
-    import tempfile
-
     from ..sources.files import list_objects
 
-    work = tempfile.mkdtemp(prefix="objlist_")
+    work = scratch_dir("objlist_")
     rows = (
         load_table(spark, sf_dir, "nation")
         .select("n_nationkey", "n_name")
@@ -764,8 +762,6 @@ def pipeline_lifecycle_runner(spark: SparkSession, sf_dir: str) -> DataFrame:
     the two-executor value verdict the Derby driver cannot. Same oracle
     as the Derby query: the two must agree with each other and with the
     fixture replay."""
-    import tempfile
-
     from pyspark.sql.types import (
         DoubleType,
         LongType,
@@ -774,7 +770,7 @@ def pipeline_lifecycle_runner(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructType,
     )
 
-    from ..plans.runner import run_connected_pipeline, target_current_state
+    from ..plans.runner import run_connected_pipeline
     from ..sources.connect_config import SourceConnection
     from ..streaming.replay import land_feed, replay_conf
 
@@ -795,7 +791,7 @@ def pipeline_lifecycle_runner(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).collect()
     ]
 
-    work = tempfile.mkdtemp(prefix="liferunner_")
+    work = scratch_dir("liferunner_")
     feed = f"{work}/feed"
     # three ticks: inserts, updates, deletes
     land_feed(
@@ -858,7 +854,7 @@ def pipeline_lifecycle_runner(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise RuntimeError("subscribe pattern must cover every topic")
     if res.full_load is None or res.full_load.rows != src.count():
         raise RuntimeError("full load did not land the snapshot rows")
-    cs = target_current_state(spark, res.target_path, ["k"])
+    cs = current_state(spark.read.parquet(res.target_path), ["k"])
     return (
         cs.groupBy(
             F.coalesce(F.col("segment"), F.lit("(pre-drift)")).alias(
@@ -939,8 +935,6 @@ def multi_pipeline_concurrent(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle re-derives every number from the customer fixture. Scale
     shape: N pipelines = N streaming queries + N partition dirs; the
     report reads event-log metadata-sized aggregates, never refeeds."""
-    import tempfile
-
     from pyspark.sql.types import (
         DoubleType,
         LongType,
@@ -948,7 +942,6 @@ def multi_pipeline_concurrent(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructType,
     )
 
-    from ..plans.runner import target_current_state
     from ..streaming.changelog_stream import (
         StreamConfig,
         file_source,
@@ -980,7 +973,7 @@ def multi_pipeline_concurrent(spark: SparkSession, sf_dir: str) -> DataFrame:
             "del": lambda k: k % 5 == 2,
         },
     }
-    work = tempfile.mkdtemp(prefix="multipipe_")
+    work = scratch_dir("multipipe_")
     log_root = f"{work}/event_log"
     payload = StructType(
         [StructField("k", LongType()), StructField("bal", DoubleType())]
@@ -1075,7 +1068,7 @@ def multi_pipeline_concurrent(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     states = []
     for pid in specs:
-        cs = target_current_state(spark, cfgs[pid].target_path, ["k"])
+        cs = current_state(spark.read.parquet(cfgs[pid].target_path), ["k"])
         states.append(
             cs.agg(
                 F.count(F.lit(1)).alias("current_rows"),
@@ -1147,8 +1140,6 @@ def stream_backpressure_bounded_replay(
     fixture. Deltas are dyadic (100.0 / 50.0 / 25.0 / 7.25) so double
     arithmetic is bit-identical across engines; sums route through
     DECIMAL(18,2) per CLAUDE.md."""
-    import tempfile
-
     from pyspark.sql.types import (
         DoubleType,
         LongType,
@@ -1156,7 +1147,6 @@ def stream_backpressure_bounded_replay(
         StructType,
     )
 
-    from ..plans.runner import target_current_state
     from ..streaming.changelog_stream import (
         StreamConfig,
         run_file_changelog_pipeline,
@@ -1177,7 +1167,7 @@ def stream_backpressure_bounded_replay(
     def bal4(k, b):
         return bal2(k, b) + 50.0
 
-    work = tempfile.mkdtemp(prefix="backpressure_")
+    work = scratch_dir("backpressure_")
     feed = f"{work}/feed"
     # insert, update, delete, update, late insert, late update
     land_feed(feed, [
@@ -1212,7 +1202,7 @@ def stream_backpressure_bounded_replay(
             run_file_changelog_pipeline(spark, feed, payload, cfg)
 
     states = {
-        m: target_current_state(spark, cfgs[m].target_path, ["k"]).select(
+        m: current_state(spark.read.parquet(cfgs[m].target_path), ["k"]).select(
             "k", "bal"
         )
         for m in cfgs

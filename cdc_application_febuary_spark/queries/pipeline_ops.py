@@ -18,6 +18,7 @@ from ..functions.changelog import is_deleted, normalize_op
 from ..functions.lsn import long_to_pg_lsn, pg_lsn_to_long
 from ..operators import dedup, lineage, multimodal, profiling, scd2, similarity
 from ..streaming.replay import feed_stream, run_replay
+from ..tempdirs import scratch_dir
 
 QUERIES: dict = {}
 ORACLES: dict = {}
@@ -154,12 +155,10 @@ def gdpr_delete_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     rewrite), and audit before/deleted/after counts plus the post-delete
     survivor count of the purged segment (must be 0). The oracle derives
     the same numbers straight from the fixture."""
-    import tempfile
-
     from ..sources import manifest_table as mt
 
     cust = load_table(spark, sf_dir, "customer")
-    t = tempfile.mkdtemp(prefix="gdpr_") + "/cust"
+    t = scratch_dir("gdpr_") + "/cust"
     mt.write_table(cust.repartitionByRange(8, "c_custkey"), t, ["c_custkey"])
     before = mt.table_rows(spark, t)
     stats = mt.delete_where(
@@ -2311,14 +2310,12 @@ FROM events GROUP BY 1 ORDER BY key
 """,
 )
 def stateful_running_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from ..streaming.stateful import running_counts
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", F.col("event_type").alias("key")
     )
-    work = tempfile.mkdtemp(prefix="stateful_q_")
+    work = scratch_dir("stateful_q_")
     stream = feed_stream(spark, f"{work}/feed", [ev])
     out_dir = f"{work}/out"
     run_replay(
@@ -3207,11 +3204,9 @@ def manifest_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     proves snapshot isolation, copy-on-write MERGE, and the file-pruned
     diff produce exactly the net row-level effect (carried-over rows in
     rewritten files must NOT surface in the feed)."""
-    import tempfile
-
     from ..sources import manifest_table as mt
 
-    t = tempfile.mkdtemp(prefix="manifest_cf_") + "/t"
+    t = scratch_dir("manifest_cf_") + "/t"
     # coalesce(4): at fixture scale 32 input partitions would stage 32
     # one-row files per commit — per-file stats jobs dominate. Real tables
     # size their files upstream; the operator is file-count-agnostic.
@@ -3306,8 +3301,6 @@ def schema_evolution_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     / commit refusal) leaving the committed version at 1. The final
     snapshot read proves NULL-backfill (pre-evolution rows surface
     segment=NULL) and the lossless widen (40 rows above int32 max)."""
-    import tempfile
-
     from ..sources import manifest_table as mt
     from ..sources.evolution import (
         SchemaConflictError,
@@ -3316,7 +3309,7 @@ def schema_evolution_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         plan_evolution,
     )
 
-    t = tempfile.mkdtemp(prefix="schemaevo_") + "/t"
+    t = scratch_dir("schemaevo_") + "/t"
     bal100 = (F.col("c_acctbal").cast("decimal(12,2)") * 100).cast("bigint")
     cust = load_table(spark, sf_dir, "customer")
     batch1 = (
@@ -4282,15 +4275,13 @@ def ann_topk_ivf_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats-pruned read path loses nothing. The approximate tier (n_probe <
     n_centroids, files actually pruned) is exercised by
     tests/test_vector_index.py."""
-    import tempfile
-
     from ..operators import vector_index as vi
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") % 10 == 0).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    t = tempfile.mkdtemp(prefix="ivf_idx_") + "/idx"
+    t = scratch_dir("ivf_idx_") + "/idx"
     vi.build_ivf_index(emb, t, n_centroids=16, files_per_cluster_group=4)
     out = vi.search_ivf_index(spark, t, queries, k=5, n_probe=16)
     return out["result"].orderBy("query_id", "rank")
@@ -4305,15 +4296,13 @@ def ann_topk_ivf_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     entries + same centroid meta), then full-probe search — which must
     exactly equal brute force over the WHOLE corpus, proving appended
     vectors are first-class in the pruned read path."""
-    import tempfile
-
     from ..operators import vector_index as vi
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") % 10 == 0).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    t = tempfile.mkdtemp(prefix="ivf_app_") + "/idx"
+    t = scratch_dir("ivf_app_") + "/idx"
     vi.build_ivf_index(
         emb.where(F.col("vec_id") % 10 < 7), t,
         n_centroids=16, files_per_cluster_group=4,
@@ -4361,8 +4350,6 @@ def ann_topk_ivf_recluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     rebuild that loses recall, or a partial-probe search that stops
     pruning files all hash-fail the gate. Measured drift numbers live in
     SCALE.md."""
-    import tempfile
-
     from ..operators import vector_index as vi
     from ..operators.similarity import cosine_topk_blocked
 
@@ -4370,7 +4357,7 @@ def ann_topk_ivf_recluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = emb.where(F.col("vec_id") % 3 == 0)
     b1 = emb.where(F.col("vec_id") % 3 == 1)
     b2 = emb.where(F.col("vec_id") % 3 == 2)
-    t = tempfile.mkdtemp(prefix="ivf_recl_") + "/idx"
+    t = scratch_dir("ivf_recl_") + "/idx"
     s0 = vi.build_ivf_index(base, t, n_centroids=16, files_per_cluster_group=4)
     s1 = vi.append_ivf_index(b1, t, batch_id=1, files_per_cluster_group=4)
     replay = vi.append_ivf_index(b1, t, batch_id=1, files_per_cluster_group=4)
@@ -5300,12 +5287,10 @@ def incremental_dedup_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     admits exactly the fingerprints whose FIRST occurrence is that batch,
     and the store ends at the global distinct count — so the incremental
     path is value-checked against a one-shot dedup."""
-    import tempfile
-
     from ..operators import incremental_dedup as idd
 
     docs = load_table(spark, sf_dir, "documents")
-    store = tempfile.mkdtemp(prefix="fp_store_") + "/fp"
+    store = scratch_dir("fp_store_") + "/fp"
     admitted = []
     for b in range(3):
         out = idd.dedup_batch(
@@ -6452,11 +6437,9 @@ def change_feed_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     feed WHICH columns changed how often
     (`manifest_table.change_feed_column_stats`). The oracle states the
     expected attribution directly from the update rule."""
-    import tempfile
-
     from ..sources import manifest_table as mt
 
-    t = tempfile.mkdtemp(prefix="manifest_cfa_") + "/t"
+    t = scratch_dir("manifest_cfa_") + "/t"
     cust = (
         load_table(spark, sf_dir, "customer")
         .select(
@@ -6857,12 +6840,10 @@ def ann_topk_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape verdict (uniform random embeddings cap its recall near
     n_probe/16, so a recall floor would be noise — the recall-recovery
     story lives in `ann_topk_ivf_recluster`)."""
-    import tempfile
-
     from ..operators import vector_index as vi
 
     emb = load_table(spark, sf_dir, "embeddings")
-    path = tempfile.mkdtemp(prefix="ivfpq_") + "/idx"
+    path = scratch_dir("ivfpq_") + "/idx"
     vi.build_ivf_pq_index(emb, path, n_centroids=16, pq_m=8, pq_k=16, seed=7)
     queries = emb.where(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), "embedding"
@@ -7010,13 +6991,11 @@ def near_dedup_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     of BOTH batches and the final sig-store footprint in pure SQL. The
     xxhash64 family stays the production default (same estimator
     statistics; `dedup_minhash_lsh` keeps it driver-visible)."""
-    import tempfile
-
     from ..operators.incremental_dedup import _sig_store_path, near_dedup_batch
     from ..sources import manifest_table as mt
 
     docs = load_table(spark, sf_dir, "documents")
-    store = tempfile.mkdtemp(prefix="near_fold_") + "/bands"
+    store = scratch_dir("near_fold_") + "/bands"
     rows = []
     bounds = [(0, 250), (250, 10**9)]
     for bi, (lo, hi) in enumerate(bounds):
@@ -7870,12 +7849,10 @@ def optimize_compaction_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     files. The oracle derives the content metrics straight from the
     fixture; the lifecycle booleans assert compaction actually reduced
     files without changing rows."""
-    import tempfile
-
     from ..sources import manifest_table as mt
 
     docs = load_table(spark, sf_dir, "documents")
-    t = tempfile.mkdtemp(prefix="optimize_") + "/docs"
+    t = scratch_dir("optimize_") + "/docs"
     mt.write_table(docs.repartition(64), t, ["doc_id"])
     v0 = mt.current_version(spark, t)
     files_before = len(mt._read_manifest(spark, t, v0))
@@ -7978,9 +7955,7 @@ def stream_join_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     join — making this the one STREAMING query with a value-hash oracle,
     not just rows-only. Dimension is broadcast: no shuffle of the stream
     side at any scale."""
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="stream_enrich_")
+    work = scratch_dir("stream_enrich_")
     target = f"{work}/target"
     orders = load_table(spark, sf_dir, "orders").where(
         F.col("o_orderkey") < 120
@@ -8269,11 +8244,9 @@ def stream_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     triggers the batch that flushes the last real windows. The sentinels'
     own windows stay unfinalized and never appear. Result must equal the
     batch GROUP BY of the real events."""
-    import tempfile
-
     from ..catalog import load_table
 
-    work = tempfile.mkdtemp(prefix="stream_win_")
+    work = scratch_dir("stream_win_")
     target = f"{work}/target"
     ev = load_table(spark, sf_dir, "events").where(
         F.col("ts") < F.lit("2024-01-03 00:00:00").cast("timestamp")
@@ -8342,12 +8315,10 @@ def csv_json_roundtrip_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     must reproduce the parquet truth exactly (acctbal routed through
     DECIMAL on every path; the Avro leg carries it as double, exact for
     2-decimal values, and re-enters DECIMAL before the SUM)."""
-    import tempfile
-
     from ..functions.avro import read_avro, write_avro
     from ..sources.files import read_csv_objects, read_json_objects
 
-    work = tempfile.mkdtemp(prefix="objscan_")
+    work = scratch_dir("objscan_")
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey",
         "c_mktsegment",
@@ -8406,12 +8377,10 @@ def vacuum_retention_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     read must be untouched, and at least one unreferenced file must have
     been garbage-collected. Oracle derives the surviving content from the
     fixture."""
-    import tempfile
-
     from ..sources import manifest_table as mt
 
     supp = load_table(spark, sf_dir, "supplier")
-    t = tempfile.mkdtemp(prefix="vacuum_") + "/supp"
+    t = scratch_dir("vacuum_") + "/supp"
     mt.write_table(
         supp.repartitionByRange(4, "s_suppkey"), t, ["s_suppkey"]
     )
@@ -8458,8 +8427,6 @@ def stateful_totals_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     addPyFile so the state protocol works even though the driver built
     this session before the engine imported (PYTHONPATH was never
     exported to the JVM)."""
-    import tempfile
-
     from ..compat.protobuf_compat import ensure_protobuf_on_workers
     from ..streaming.stateful_v2 import ROCKSDB_PROVIDER, running_counts_tws
 
@@ -8467,7 +8434,7 @@ def stateful_totals_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise RuntimeError(
             "no protobuf runtime available for transformWithState"
         )
-    work = tempfile.mkdtemp(prefix="tws_q_")
+    work = scratch_dir("tws_q_")
     target = f"{work}/target"
     ev = load_table(spark, sf_dir, "events").where(
         F.col("ts") < F.lit("2024-01-02 00:00:00").cast("timestamp")
@@ -8538,11 +8505,9 @@ def stream_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream-stream joins emit on match, not on watermark finalization).
     The returned rows are the per-user pair counts and exact integer gap
     sums over the emitted pairs."""
-    import tempfile
-
     from ..streaming.joins import stream_stream_range_join
 
-    work = tempfile.mkdtemp(prefix="ss_join_")
+    work = scratch_dir("ss_join_")
     ev = load_table(spark, sf_dir, "events")
 
     def read_feed(etype: str, ts_name: str) -> DataFrame:
@@ -8616,11 +8581,9 @@ def stream_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact). Post-dedup per-type row counts must equal the original
     feed's distinct counts: n_rows == n_keys, any leaked duplicate
     breaks the hash."""
-    import tempfile
-
     from ..streaming.joins import stream_dedup
 
-    work = tempfile.mkdtemp(prefix="sdedup_")
+    work = scratch_dir("sdedup_")
     ev = load_table(spark, sf_dir, "events").select(
         "event_id",
         "event_type",
@@ -8841,13 +8804,11 @@ def incremental_semdedup_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     frozen-centroid tier (`semantic_dedup_batch`) keeps its independence
     invariant + replay + determinism pins in
     tests/test_incremental_semdedup.py."""
-    import tempfile
-
     from ..operators.incremental_dedup import srp_semantic_dedup_batch
     from ..sources import manifest_table as mt
 
     emb = load_table(spark, sf_dir, "embeddings")
-    store = tempfile.mkdtemp(prefix="sem_fold_") + "/kept"
+    store = scratch_dir("sem_fold_") + "/kept"
     rows = []
     for b in range(3):
         part = emb.where(F.col("vec_id") % 3 == b)
@@ -9085,11 +9046,9 @@ def stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     sentinel files per SIDE (global watermark = min across sources)
     push the watermark past the horizon and trigger the flush batch;
     the sentinels' own clicks never finalize and never appear."""
-    import tempfile
-
     from ..streaming.joins import stream_stream_range_join
 
-    work = tempfile.mkdtemp(prefix="ss_outer_")
+    work = scratch_dir("ss_outer_")
     ev = load_table(spark, sf_dir, "events").where(
         F.col("ts") < F.lit("2024-01-08 00:00:00").cast("timestamp")
     )
@@ -9560,8 +9519,6 @@ def incremental_sketch_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the cumulative '<all>' curve plus the final per-type rollup are
     computed from the STORED BLOBS ONLY — the read path never rescans
     events. Verdicts: every estimate within 10% of the exact count."""
-    import tempfile
-
     from ..catalog import load_events_raw
     from ..operators import sketches
 
@@ -9572,7 +9529,7 @@ def incremental_sketch_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.where((F.col("ts") >= b1) & (F.col("ts") < b2)),
         ev.where(F.col("ts") >= b2),
     ]
-    store = tempfile.mkdtemp(prefix="hllstore_") + "/sketches"
+    store = scratch_dir("hllstore_") + "/sketches"
     # all three cumulative exact distincts from ONE first-seen pass (r10):
     # distinct users with any event before boundary == users whose MIN ts
     # is before it (min skips NULL ts exactly as the old ts filter
@@ -9711,8 +9668,6 @@ def stream_drift_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     committed_rows is read from the TARGET, so at-least-once regressions
     or gate flips hash-fail; psi_e6, counts, and verdicts all replay in
     SQL from the same batch definitions."""
-    import tempfile
-
     from ..catalog import load_events_raw
 
     ev = load_events_raw(spark, sf_dir).select("event_id", "value")
@@ -9731,7 +9686,7 @@ def stream_drift_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tr = int(sum(r["nr"] for r in ref_rows))
 
-    work = tempfile.mkdtemp(prefix="sdrift_")
+    work = scratch_dir("sdrift_")
     parts = [
         ev.where(F.col("event_id") % 3 == 0),
         ev.where(F.col("event_id") % 3 == 1),
@@ -10403,8 +10358,6 @@ def stream_session_eviction(spark: SparkSession, sf_dir: str) -> DataFrame:
     (timers fire one batch after the watermark passes — the r5 eviction
     rule); the sentinels' own session never finalizes and never appears.
     """
-    import tempfile
-
     from ..catalog import load_events_raw
     from ..compat.protobuf_compat import ensure_protobuf_on_workers
     from ..streaming.stateful_v2 import ROCKSDB_PROVIDER, session_windows_tws
@@ -10416,7 +10369,7 @@ def stream_session_eviction(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_events_raw(spark, sf_dir).select("user_id", "ts")
     bound = 1704240000 * 10**9  # 2024-01-03 00:00 UTC in nanos
     split = 1704153600 * 10**9  # 2024-01-02 00:00 UTC
-    work = tempfile.mkdtemp(prefix="sess_tws_")
+    work = scratch_dir("sess_tws_")
     halves = [
         F.col("ts") < split,
         (F.col("ts") >= split) & (F.col("ts") < bound),
@@ -10553,8 +10506,6 @@ def stream_state_metrics_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark; its occurrence is config-dependent, so it is out of
     contract). Scale shape: the report is one row per (batch, operator)
     — KBs at any corpus size; the replay feed is sf-bounded."""
-    import tempfile
-
     from pyspark.sql.types import (
         LongType,
         StringType,
@@ -10562,7 +10513,7 @@ def stream_state_metrics_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructType,
     )
 
-    work = tempfile.mkdtemp(prefix="state_metrics_")
+    work = scratch_dir("state_metrics_")
     ev = load_table(spark, sf_dir, "events").where(
         F.col("ts") < F.lit("2024-01-03 00:00:00").cast("timestamp")
     )
@@ -10717,9 +10668,7 @@ def stream_windowed_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     window row fails the gate. Scale shape: state and shuffle carry only
     KB-sized register blobs per window; rollups read the blobs, not the
     stream; the replay feed is sf-bounded."""
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="hll_win_")
+    work = scratch_dir("hll_win_")
     ev = load_table(spark, sf_dir, "events").where(
         F.col("ts") < F.lit("2024-01-03 00:00:00").cast("timestamp")
     )

@@ -14,6 +14,8 @@ from pathlib import Path
 from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
+from .tempdirs import scratch_dir
+
 # Runtime-settable SQL confs applied to *any* session (including one handed
 # to us by an external harness). Keep only confs that SQLConf allows setting
 # after startup.
@@ -85,7 +87,6 @@ def ensure_package_on_workers(spark: SparkSession) -> None:
     built once per process and added once per SparkContext; identical
     content to the driver's copy, so shadowing is harmless in local
     mode."""
-    import tempfile
     import zipfile
     from pathlib import Path
 
@@ -96,7 +97,7 @@ def ensure_package_on_workers(spark: SparkSession) -> None:
     zpath = _PKG_ZIP.get("pkg")
     if zpath is None or not os.path.exists(zpath):
         pkg_dir = Path(__file__).resolve().parent
-        zdir = tempfile.mkdtemp(prefix="cdcafs_pkg_")
+        zdir = scratch_dir("cdcafs_pkg_")
         zpath = os.path.join(zdir, "cdc_application_febuary_spark.zip")
         with zipfile.ZipFile(zpath, "w") as z:
             for f in sorted(pkg_dir.rglob("*.py")):

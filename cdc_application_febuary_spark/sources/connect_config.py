@@ -6,10 +6,11 @@ of dialect-specific properties — plus deterministic naming for
 connectors, replication slots, publications, and topics
 (`/root/reference/backend/ingestion/debezium_config.py:14-776`). This
 module re-expresses those semantics: per-dialect connector classes,
-snapshot-mode remaps (each dialect accepts a different subset of
-Debezium's modes), envelope-vs-unwrap transform choices, and the naming
-rules downstream consumers depend on
-(`functions/identifiers.topic_name` parses the same shapes back).
+envelope-vs-unwrap transform choices, and the naming rules downstream
+consumers depend on (`functions/identifiers.topic_name` parses the same
+shapes back). The snapshot-mode remaps (each dialect accepts a different
+subset of Debezium's modes) and the engine aliases live in
+`plans/snapshot.py`; the config writes the mode that plan resolved.
 
 Everything here is pure config generation — no Kafka client, no
 network — so it is fully testable offline; the Spark engine consumes
@@ -21,6 +22,8 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass, field
+
+from ..plans.snapshot import normalize_engine
 
 
 @dataclass
@@ -80,12 +83,9 @@ _DIALECTS = {
     },
 }
 
-_ALIASES = {"mssql": "sqlserver", "ibm_i": "as400"}
-
 
 def _dialect(database_type: str) -> str:
-    dt = database_type.lower()
-    dt = _ALIASES.get(dt, dt)
+    dt = normalize_engine(database_type)
     if dt not in _DIALECTS:
         raise ValueError(f"unsupported database type for Debezium: {dt}")
     return dt
@@ -130,58 +130,18 @@ def topic_for(
     return ".".join(parts)
 
 
-def resolve_connector_snapshot_mode(
-    database_type: str, requested: str, has_full_load_offset: bool
-) -> str:
-    """Map the engine's requested mode onto what each dialect accepts.
-
-    * postgresql: `never` streams immediately; a completed full load
-      (offset captured) demotes any snapshot to `initial_only`
-      (schema only — data already loaded); bare `schema_only` is not a
-      PG mode and becomes `initial`.
-    * sqlserver: has no `never`; with an offset use `schema_only`,
-      without one fall back to `initial`.
-    * oracle: has no `never` either; `initial_only` replaces it.
-    * db2/as400: `never` is only safe once an offset exists (the
-      journal/commit position); otherwise a full `initial` snapshot.
-    """
-    d = _dialect(database_type)
-    r = requested
-    if d == "postgresql":
-        if r == "never":
-            return "never"
-        if has_full_load_offset:
-            return "initial_only"
-        return "initial" if r == "schema_only" else r
-    if d == "sqlserver":
-        if r == "never":
-            return "schema_only" if has_full_load_offset else "initial"
-        return r
-    if d == "oracle":
-        if r == "never":
-            return "initial_only" if has_full_load_offset else "initial"
-        return "initial_only" if r == "schema_only" else r
-    # db2 / as400
-    if r == "never" and not has_full_load_offset:
-        return "initial"
-    if r == "schema_only":
-        return "schema_only" if has_full_load_offset else "initial"
-    if has_full_load_offset:
-        return "never"
-    return "initial"
-
-
 def debezium_source_config(
     pipeline_name: str,
     connection: SourceConnection,
     database: str,
     schema: str,
     tables: list[str],
-    full_load_lsn: str | None = None,
-    snapshot_mode: str = "never",
+    snapshot_mode: str,
     kafka_bootstrap: str = "localhost:9092",
 ) -> dict:
-    """The connector config dict a Kafka-Connect POST would carry."""
+    """The connector config dict a Kafka-Connect POST would carry.
+    ``snapshot_mode`` is written verbatim: pass the mode
+    `plans.snapshot.resolve_snapshot_mode` resolved for this engine."""
     d = _dialect(connection.database_type)
     spec = _DIALECTS[d]
     if not schema or not schema.strip():
@@ -198,9 +158,6 @@ def debezium_source_config(
     if not tables:
         raise ValueError(f"no tables provided for pipeline {pipeline_name}")
 
-    mode = resolve_connector_snapshot_mode(
-        d, snapshot_mode, full_load_lsn is not None
-    )
     host = connection.extra.get("docker_hostname", connection.host)
     port = connection.port or spec["default_port"]
 
@@ -215,7 +172,7 @@ def debezium_source_config(
         "database.server.name": pipeline_name,
         "topic.prefix": pipeline_name,
         "table.include.list": ",".join(f"{schema}.{t}" for t in tables),
-        "snapshot.mode": mode,
+        "snapshot.mode": snapshot_mode,
         "key.converter": "org.apache.kafka.connect.json.JsonConverter",
         "key.converter.schemas.enable": "false",
         "value.converter": "org.apache.kafka.connect.json.JsonConverter",

@@ -198,13 +198,6 @@ def create_table_column_types(engine: str, schema: StructType) -> str:
     )
 
 
-def scd2_meta_ddl(engine: str) -> str:
-    """SCD2 metadata columns appended to every target DDL
-    (reference transfer.py:602-608, 718-722, 813-816)."""
-    s = _TARGET_DDL.get(engine, _TARGET_DDL["postgresql"])
-    return f"__op {s['string']}, __source_ts_ms {s['bigint']}, __deleted {s['string']}"
-
-
 def conform_to_schema(df: DataFrame, schema: "StructType") -> DataFrame:
     """Cast/select a DataFrame to exactly the canonical table schema —
     the engine-side form of the reference's frozen target schema

@@ -35,6 +35,7 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
 from ..functions.changelog import decode_debezium
+from ..plans.snapshot import normalize_engine
 from .replay import drain
 
 
@@ -81,7 +82,7 @@ def topic_pattern(pipeline: str, engine: str = "postgresql") -> str:
     reference topic naming (`debezium_config.py:747-775`):
     ``{pipeline}.{schema}.{table}`` — SQL Server inserts the database for a
     4-part name (`{pipeline}.{db}.{schema}.{table}``)."""
-    parts = 3 if engine.lower() != "sqlserver" else 4
+    parts = 4 if normalize_engine(engine) == "sqlserver" else 3
     seg = r"[^.]+"
     return rf"^{pipeline}\." + r"\.".join([seg] * (parts - 1)) + "$"
 

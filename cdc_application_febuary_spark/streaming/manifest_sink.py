@@ -100,14 +100,3 @@ def manifest_append_sink(
         append_batch(batch, batch_id, table_path, key_cols)
 
     return sink
-
-
-def manifest_upsert_sink(
-    table_path: str, key_cols: list[str], delete_col: str | None = None
-) -> Callable[[DataFrame, int], None]:
-    """foreachBatch callable: exactly-once MERGE into a manifest table."""
-
-    def sink(batch: DataFrame, batch_id: int) -> None:
-        upsert_batch(batch, batch_id, table_path, key_cols, delete_col)
-
-    return sink

@@ -29,12 +29,14 @@ def test_postgres_config_shape():
 
 
 def test_sqlserver_remaps_never_and_unwraps():
+    # the plan remaps never -> schema_only (sqlserver has no never); the
+    # config writes the resolved mode verbatim
     cfg = CC.debezium_source_config(
         "p1", _conn("mssql"), "sales", "", ["t1"],
-        full_load_lsn="0000002a", snapshot_mode="never",
+        snapshot_mode="schema_only",
         kafka_bootstrap="broker:9092",
     )
-    assert cfg["snapshot.mode"] == "schema_only"  # never unsupported
+    assert cfg["snapshot.mode"] == "schema_only"
     assert cfg["database.names"] == "sales"
     assert cfg["transforms.unwrap.delete.handling.mode"] == "rewrite"
     assert cfg["transforms.unwrap.add.fields"] == "op,source.ts_ms"
@@ -42,12 +44,12 @@ def test_sqlserver_remaps_never_and_unwraps():
         cfg["schema.history.internal.kafka.bootstrap.servers"]
         == "broker:9092"
     )
-    # without an offset, never falls back to a full snapshot
     cfg2 = CC.debezium_source_config(
         "p1", _conn("sqlserver"), "sales", "dbo", ["t1"],
-        snapshot_mode="never",
+        snapshot_mode="initial",
     )
     assert cfg2["snapshot.mode"] == "initial"
+    assert cfg2["name"] == cfg["name"]  # mssql is an alias of sqlserver
 
 
 def test_oracle_requires_schema_and_uses_logminer():
@@ -57,7 +59,7 @@ def test_oracle_requires_schema_and_uses_logminer():
         )
     cfg = CC.debezium_source_config(
         "p", _conn("oracle"), "ORCL", "C##CDC_USER", ["T"],
-        full_load_lsn="scn:123", snapshot_mode="never",
+        snapshot_mode="initial_only",
     )
     assert cfg["snapshot.mode"] == "initial_only"
     assert cfg["database.connection.adapter"] == "logminer"
@@ -69,17 +71,17 @@ def test_oracle_requires_schema_and_uses_logminer():
 def test_as400_library_defaults_and_snapshot_matrix():
     cfg = CC.debezium_source_config(
         "p", _conn("as400", library="MYLIB", default_library="QGPL"),
-        "", "", ["CUSTS"], snapshot_mode="never",
+        "", "", ["CUSTS"], snapshot_mode="initial",
     )
     assert cfg["connector.class"].endswith("As400RpcConnector")
     assert cfg["database.schema"] == "MYLIB"
     assert cfg["database.dbname"] == "QGPL"
     assert cfg["database.port"] == "446"
-    assert cfg["snapshot.mode"] == "initial"  # no offset -> full snapshot
+    assert cfg["snapshot.mode"] == "initial"  # written verbatim
     cfg2 = CC.debezium_source_config(
-        "p", _conn("ibm_i"), "LIB1", "LIB1", ["T"],
-        full_load_lsn="journal:99", snapshot_mode="never",
+        "p", _conn("ibm_i"), "LIB1", "LIB1", ["T"], snapshot_mode="never",
     )
+    assert cfg2["connector.class"].endswith("As400RpcConnector")
     assert cfg2["snapshot.mode"] == "never"
 
 
@@ -110,28 +112,6 @@ def test_topic_roundtrips_through_engine_parser(spark):
         .first()["tbl"]
     )
     assert got == "orders"
-
-
-def test_snapshot_resolution_agrees_with_stream_start_plan():
-    """The connector-side mode and the engine-side StreamStartPlan matrix
-    (plans/snapshot.py) must tell the same story for the core cases."""
-    from cdc_application_febuary_spark.plans.snapshot import (
-        resolve_snapshot_mode,
-    )
-
-    for engine in ("postgresql", "sqlserver", "oracle", "as400"):
-        plan = resolve_snapshot_mode(
-            engine, "never", full_load_completed=True, has_captured_offset=True
-        )
-        cfg_mode = CC.resolve_connector_snapshot_mode(engine, "never", True)
-        if engine == "postgresql":
-            assert plan.snapshot_mode == cfg_mode == "never"
-        elif engine == "sqlserver":
-            assert plan.snapshot_mode == cfg_mode == "schema_only"
-        elif engine == "oracle":
-            assert plan.snapshot_mode == cfg_mode == "initial_only"
-        else:
-            assert cfg_mode == "never" and plan.snapshot_mode == "never"
 
 
 def test_no_hardcoded_endpoints():

@@ -29,6 +29,22 @@ def test_detects_row_loss_and_null_increase(spark):
     assert rep.null_deltas["name"] == 1  # the transfer dropped a value
 
 
+def test_streamed_target_batch_id_is_metadata_in_both_checks(spark):
+    """A target holding streamed rows carries `__batch_id`: the schema
+    parity check and the drift diff must both treat it as SCD2 metadata,
+    so the report cannot say schema_match=False with no drift."""
+    from cdc_application_febuary_spark.operators.reconciliation import (
+        validate_schema,
+    )
+
+    src = spark.createDataFrame([(1, "a")], ["id", "name"])
+    tgt = stamp_full_load(src).withColumn("__batch_id", F.lit(0).cast("long"))
+    assert validate_schema(src, tgt)["matches"]
+    rep = data_quality_report(src, tgt)
+    assert rep.schema_match and rep.drift == []
+    assert rep.healthy
+
+
 def test_detects_drift(spark):
     src = spark.createDataFrame([(1, "a")], ["id", "name"])
     tgt = stamp_full_load(src.withColumn("id", F.col("id").cast("string")))

@@ -51,6 +51,25 @@ def test_unknown_engine_rejected():
         resolve_snapshot_mode("mongodb", "cdc_only", False, False)
 
 
+def test_unknown_mode_rejected():
+    with pytest.raises(ValueError, match="unknown pipeline mode"):
+        resolve_snapshot_mode("postgresql", "never", False, False)
+
+
+def test_engine_aliases_resolve_to_one_engine():
+    p = resolve_snapshot_mode("mssql", "full_load_and_cdc", True, True)
+    assert p.engine == "sqlserver" and p.snapshot_mode == "schema_only"
+    p = resolve_snapshot_mode("IBM_I", "cdc_only", False, False)
+    assert p.engine == "as400" and p.run_full_load
+
+
+def test_full_load_only_never_streams():
+    p = resolve_snapshot_mode("postgresql", "full_load_only", False, False)
+    assert p.run_full_load and not p.run_stream
+    p = resolve_snapshot_mode("postgresql", "full_load_and_cdc", False, False)
+    assert p.run_stream
+
+
 # --- stateful streaming (applyInPandasWithState) ----------------------------
 def _feed(path, rows):
     path.mkdir(parents=True, exist_ok=True)

@@ -13,11 +13,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from cdc_application_febuary_spark.plans.pipeline import (
-    PipelineSpec,
-    run_full_load,
-    run_pipeline_full_loads,
-)
+from cdc_application_febuary_spark.plans.pipeline import run_full_load
 from cdc_application_febuary_spark.sources.jdbc import (
     JdbcReadSpec,
     JdbcWriteSpec,
@@ -134,25 +130,3 @@ def test_run_full_load(spark, tmp_path, sf_small):
     row = tgt.limit(1).collect()[0]
     assert row["__op"] == "r" and row["__deleted"] is None
     assert tgt.where(F.col("__source_ts_ms").isNull()).count() == 0
-
-
-def test_run_pipeline_full_loads(spark, tmp_path, sf_small):
-    spec = PipelineSpec(
-        pipeline_id="p1",
-        mode="full_load_only",
-        tables=["region", "nation"],
-        target_root=str(tmp_path / "tgt"),
-        checkpoint_root=str(tmp_path / "ckpt"),
-    )
-    sources = {
-        t: spark.read.parquet(f"{sf_small}/{t}.parquet") for t in spec.tables
-    }
-    results = run_pipeline_full_loads(spark, spec, sources)
-    assert [r.table for r in results] == ["region", "nation"]
-    assert all(r.reconciliation["row_count"] for r in results)
-    assert spark.read.parquet(spec.target_path("region")).count() == 5
-
-
-def test_cdc_only_skips_full_load(spark, tmp_path):
-    spec = PipelineSpec(pipeline_id="p2", mode="cdc_only", tables=["x"])
-    assert run_pipeline_full_loads(spark, spec, {}) == []
