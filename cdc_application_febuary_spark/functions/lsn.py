@@ -125,22 +125,19 @@ def long_to_as400_journal(v: Column | str, library: Column | str = "QSYS") -> Co
     return F.concat(F.lit("JOURNAL:"), lib, F.lit(":"), iso)
 
 
-_ENGINE_PARSERS = {
-    "postgresql": pg_lsn_to_long,
-    "sqlserver": sqlserver_lsn_to_long,
-    "oracle": oracle_scn_to_long,
-    "as400": as400_journal_to_long,
-}
-
-
 def offset_to_long(offset: Column | str, engine: Column | str) -> Column:
     """Dispatch an offset string to its engine's parser — the shape of a
     real multi-source lag table (one ``engine`` column, one ``offset``
     string column, as the reference's per-connector ``extract_lsn_offset``
-    results land in a shared metrics store). Unknown engines yield NULL."""
+    results land in a shared metrics store), with each engine record's
+    parser (`sources/dialects.py`). Unknown engines yield NULL."""
+    from ..sources.dialects import ALIASES, DIALECTS  # it imports this module
+
     off = F.col(offset) if isinstance(offset, str) else offset
     eng = F.col(engine) if isinstance(engine, str) else engine
     expr = F.lit(None).cast("long")
-    for name, parser in _ENGINE_PARSERS.items():
-        expr = F.when(eng == name, parser(off)).otherwise(expr)
+    for d in DIALECTS.values():
+        if d.offset_parser:
+            names = [d.name] + [a for a, n in ALIASES.items() if n == d.name]
+            expr = F.when(eng.isin(*names), d.offset_parser(off)).otherwise(expr)
     return expr

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..functions.text import fingerprint
 from ..sources import manifest_table as mt
-from ..streaming.manifest_sink import last_committed_batch
+from ..streaming.manifest_sink import is_replay
 
 
 def _fingerprinted(
@@ -50,8 +50,7 @@ def dedup_batch(
     admitted set of that batch is already reflected, so the caller must
     not re-emit it)."""
     spark = batch.sparkSession
-    seen_batch = last_committed_batch(spark, store_path)
-    if seen_batch is not None and batch_id <= seen_batch:
+    if is_replay(spark, store_path, batch_id):
         return None
 
     fp = _fingerprinted(batch, id_col, text_col)
@@ -221,8 +220,7 @@ def near_dedup_batch(
     )
 
     spark = batch.sparkSession
-    seen_batch = last_committed_batch(spark, store_path)
-    if seen_batch is not None and batch_id <= seen_batch:
+    if is_replay(spark, store_path, batch_id):
         return None
 
     rows_per_band = num_hashes // bands
@@ -408,8 +406,7 @@ def semantic_dedup_batch(
     from .similarity import _assign_cluster_udf, _kmeans_sample
 
     spark = batch.sparkSession
-    seen_batch = last_committed_batch(spark, store_path)
-    if seen_batch is not None and batch_id <= seen_batch:
+    if is_replay(spark, store_path, batch_id):
         return None
 
     centers = _store_centroids(spark, store_path)
@@ -576,8 +573,7 @@ def srp_semantic_dedup_batch(
     from .similarity import portable_srp_bucket_col
 
     spark = batch.sparkSession
-    seen_batch = last_committed_batch(spark, store_path)
-    if seen_batch is not None and batch_id <= seen_batch:
+    if is_replay(spark, store_path, batch_id):
         return None
 
     # r10: bucket attached as a per-row column (see dedup.srp_semantic_dedup)

@@ -15,6 +15,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..sources.dialects import dialect
+
 EDGE_COLS = ("from_table", "to_table", "from_column", "to_column", "type")
 
 
@@ -36,35 +38,6 @@ def fk_edges_from_catalog(
     )
 
 
-#: FK table-level edge query per engine's system catalog. The reference
-#: reads SQL Server's sys.foreign_keys (connectors/sqlserver.py:2016-2240);
-#: PostgreSQL uses pg_constraint contype='f'; embedded Derby (the live
-#: engine in this container) exposes SYS.SYSFOREIGNKEYS.
-_CATALOG_EDGE_SQL = {
-    "derby": """
-        SELECT tc.TABLENAME AS from_table, tt.TABLENAME AS to_table,
-               c1.CONSTRAINTNAME AS constraint_name
-        FROM SYS.SYSFOREIGNKEYS fk
-        JOIN SYS.SYSCONSTRAINTS c1 ON fk.CONSTRAINTID = c1.CONSTRAINTID
-        JOIN SYS.SYSTABLES tc ON c1.TABLEID = tc.TABLEID
-        JOIN SYS.SYSCONSTRAINTS c2 ON fk.KEYCONSTRAINTID = c2.CONSTRAINTID
-        JOIN SYS.SYSTABLES tt ON c2.TABLEID = tt.TABLEID
-    """,
-    "postgresql": """
-        SELECT conrelid::regclass::text AS from_table,
-               confrelid::regclass::text AS to_table,
-               conname AS constraint_name
-        FROM pg_constraint WHERE contype = 'f'
-    """,
-    "sqlserver": """
-        SELECT OBJECT_NAME(parent_object_id) AS from_table,
-               OBJECT_NAME(referenced_object_id) AS to_table,
-               name AS constraint_name
-        FROM sys.foreign_keys
-    """,
-}
-
-
 def fk_edges_from_live_catalog(
     spark, url: str, engine: str = "derby"
 ) -> DataFrame:
@@ -72,8 +45,12 @@ def fk_edges_from_live_catalog(
     the engine's system catalog over JDBC (pushdown subquery — the catalog
     never leaves the database unfiltered). Returns
     ``(from_table, to_table, constraint_name, type)``; feed into
-    :func:`reachable_tables` / :func:`missing_dependencies`."""
-    sql = _CATALOG_EDGE_SQL[engine].strip()
+    :func:`reachable_tables` / :func:`missing_dependencies`. The query is
+    the engine record's `fk_catalog_sql` (`sources/dialects.py`)."""
+    sql = dialect(engine).fk_catalog_sql
+    if sql is None:
+        raise ValueError(f"no FK catalog query for engine {engine!r}")
+    sql = sql.strip()
     df = (
         spark.read.format("jdbc")
         .option("url", url)

@@ -162,11 +162,10 @@ def line_dedup_batch(
     re-emit (the `incremental_dedup.dedup_batch` discipline, reused
     verbatim so the two incremental stores share crash semantics)."""
     from ..sources import manifest_table as mt
-    from ..streaming.manifest_sink import last_committed_batch
+    from ..streaming.manifest_sink import is_replay
 
     spark = batch.sparkSession
-    seen_batch = last_committed_batch(spark, store_path)
-    if seen_batch is not None and batch_id <= seen_batch:
+    if is_replay(spark, store_path, batch_id):
         return None
 
     keyed = (

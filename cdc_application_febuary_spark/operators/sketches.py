@@ -252,11 +252,9 @@ def sketch_fold_batch(
 
     Returns the committed manifest version, or None on replay."""
     from ..sources import manifest_table as mt
-    from ..streaming.manifest_sink import last_committed_batch
+    from ..streaming.manifest_sink import is_replay
 
-    spark = batch.sparkSession
-    seen = last_committed_batch(spark, store_path)
-    if seen is not None and batch_id <= seen:
+    if is_replay(batch.sparkSession, store_path, batch_id):
         return None
     sk = shard_sketches(batch, value_col, shard_col, lg_k).withColumn(
         "batch_id", F.lit(int(batch_id)).cast("long")

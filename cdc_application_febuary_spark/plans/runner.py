@@ -63,6 +63,7 @@ def plan_connected_pipeline(
     (`topic_for` / `topic_pattern` / `table_name_from_topic` round-trip)."""
     from ..sources.connect_config import (
         SourceConnection,
+        debezium_dialect,
         debezium_source_config,
         topic_for,
     )
@@ -76,6 +77,9 @@ def plan_connected_pipeline(
         full_load_completed=full_load_lsn is not None,
         has_captured_offset=full_load_lsn is not None,
     )
+    # one schema for the config and the topics: the engine's default if blank
+    d = debezium_dialect(plan.engine)
+    schema = d.resolve_schema(schema, database, connection.extra)
     cfg = debezium_source_config(
         pipeline_id,
         connection,
@@ -85,7 +89,7 @@ def plan_connected_pipeline(
         snapshot_mode=plan.snapshot_mode,
         kafka_bootstrap=kafka_bootstrap,
     )
-    topic_db = database if plan.engine == "sqlserver" else None
+    topic_db = database if d.database_in_topic else None
     return ConnectedPipelinePlan(
         connector_config=cfg,
         topics=[topic_for(pipeline_id, schema, t, database=topic_db) for t in tables],

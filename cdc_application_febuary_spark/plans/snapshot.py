@@ -18,25 +18,17 @@ becomes a plan decision: (run_full_load?, startingOffsets, run_stream?).
 Every consumer reads the resolved `StreamStartPlan` and decides nothing
 itself: the connector config writes `snapshot_mode` verbatim, the runner
 runs the full load and the stream as the plan says, and topic naming
-reads the normalized `engine`. Engine aliases and mode names live here
-and nowhere else (`tests/test_single_owner.py` enforces it)."""
+reads the normalized `engine`. Mode names live here and nowhere else;
+the remap facts and the engine aliases live in `sources/dialects.py`
+(`tests/test_single_owner.py` enforces both)."""
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-ENGINES = ("postgresql", "sqlserver", "oracle", "db2", "as400", "snowflake", "s3")
-_ALIASES = {"mssql": "sqlserver", "ibm_i": "as400"}
+from ..sources.dialects import dialect
+
 MODES = ("full_load_and_cdc", "full_load_only", "cdc_only")
-
-
-def normalize_engine(engine: str) -> str:
-    """Canonical engine name (aliases resolved); unknown engines raise."""
-    e = engine.lower()
-    e = _ALIASES.get(e, e)
-    if e not in ENGINES:
-        raise ValueError(f"unknown engine {e!r}")
-    return e
 
 
 @dataclass
@@ -56,7 +48,8 @@ def resolve_snapshot_mode(
     has_captured_offset: bool,
 ) -> StreamStartPlan:
     """Port of the decision matrix (semantics, not code — see module doc)."""
-    engine = normalize_engine(engine)
+    d = dialect(engine)
+    engine = d.name
     if mode not in MODES:
         raise ValueError(f"unknown pipeline mode {mode!r}")
     run_stream = mode != "full_load_only"
@@ -78,17 +71,10 @@ def resolve_snapshot_mode(
 
     # per-engine remaps (debezium_config.py:155-167, 259-263, 379-398, 576-596)
     if base.snapshot_mode == "never":
-        if engine == "oracle":
-            return plan(
-                "initial_only", base.run_full_load, base.starting_offsets,
-                "oracle forbids snapshot.mode=never -> initial_only",
-            )
-        if engine == "sqlserver":
-            return plan(
-                "schema_only", base.run_full_load, base.starting_offsets,
-                "sqlserver remaps never -> schema_only",
-            )
-        if engine in ("db2", "as400") and not has_captured_offset:
+        if d.never_remap:
+            snapshot_mode, reason = d.never_remap
+            return plan(snapshot_mode, base.run_full_load, base.starting_offsets, reason)
+        if d.never_needs_offset and not has_captured_offset:
             return plan(
                 "initial", True, "earliest",
                 "as400 without an offset falls back to a full snapshot",

@@ -8,9 +8,10 @@ connectors, replication slots, publications, and topics
 module re-expresses those semantics: per-dialect connector classes,
 envelope-vs-unwrap transform choices, and the naming rules downstream
 consumers depend on (`functions/identifiers.topic_name` parses the same
-shapes back). The snapshot-mode remaps (each dialect accepts a different
-subset of Debezium's modes) and the engine aliases live in
-`plans/snapshot.py`; the config writes the mode that plan resolved.
+shapes back). Each dialect's facts (connector class, default port and
+schema, per-connector properties, JDBC URL) are its record in
+`sources/dialects.py`; the snapshot-mode remaps are resolved by
+`plans/snapshot.py`, and the config writes the mode that plan resolved.
 
 Everything here is pure config generation — no Kafka client, no
 network — so it is fully testable offline; the Spark engine consumes
@@ -23,7 +24,7 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
-from ..plans.snapshot import normalize_engine
+from .dialects import dialect
 
 
 @dataclass
@@ -37,77 +38,17 @@ class SourceConnection:
     extra: dict = field(default_factory=dict)
 
 
-_DIALECTS = {
-    "postgresql": {
-        "class": "io.debezium.connector.postgresql.PostgresConnector",
-        "short": "pg",
-        "default_schema": "public",
-        "default_port": 5432,
-        "unwrap": False,  # keep the envelope; the sink extracts `after`
-        "schema_history": False,
-    },
-    "sqlserver": {
-        "class": "io.debezium.connector.sqlserver.SqlServerConnector",
-        "short": "mssql",
-        "default_schema": "dbo",
-        "default_port": 1433,
-        "unwrap": True,
-        "drop_tombstones": "false",
-        "schema_history": True,
-    },
-    "oracle": {
-        "class": "io.debezium.connector.oracle.OracleConnector",
-        "short": "ora",
-        "default_schema": None,  # Oracle schema == user, no silent default
-        "default_port": 1521,
-        "unwrap": False,
-        "schema_history": True,
-    },
-    "db2": {
-        "class": "io.debezium.connector.db2.Db2Connector",
-        "short": "db2",
-        "default_schema": None,
-        "default_port": 50000,
-        "unwrap": True,
-        "drop_tombstones": "true",
-        "schema_history": True,
-    },
-    "as400": {
-        "class": "io.debezium.connector.db2as400.As400RpcConnector",
-        "short": "as400",
-        "default_schema": "QSYS",
-        "default_port": 446,
-        "unwrap": True,
-        "drop_tombstones": "false",
-        "schema_history": True,
-    },
-}
-
-
-def _dialect(database_type: str) -> str:
-    dt = normalize_engine(database_type)
-    if dt not in _DIALECTS:
-        raise ValueError(f"unsupported database type for Debezium: {dt}")
-    return dt
-
-
-def _snake(name: str) -> str:
-    return re.sub(r"[^a-z0-9_]", "_", name.lower().replace("-", "_"))
-
-
-def slot_name(pipeline_name: str) -> str:
-    """Postgres replication-slot name: [a-z0-9_] only."""
-    return f"{_snake(pipeline_name)}_slot"
-
-
-def publication_name(pipeline_name: str, extra: dict | None = None) -> str:
-    ex = extra or {}
-    return ex.get("publication_name") or f"{_snake(pipeline_name)}_pub"
+def debezium_dialect(database_type: str):
+    """The engine's record; engines with no Debezium source connector raise."""
+    d = dialect(database_type)
+    if d.connector_class is None:
+        raise ValueError(f"unsupported database type for Debezium: {d.name}")
+    return d
 
 
 def connector_name(pipeline_name: str, database_type: str, schema: str) -> str:
     """cdc-{pipeline}-{dialect-short}-{schema}, URL-safe."""
-    short = _DIALECTS[_dialect(database_type)]["short"]
+    short = debezium_dialect(database_type).connector_short
     s = re.sub(r"[^a-z0-9._-]", "_", (schema or "").lower())
     s = re.sub(r"_+", "_", s).strip("_")
     return f"cdc-{pipeline_name.lower()}-{short}-{s}"
@@ -142,28 +83,17 @@ def debezium_source_config(
     """The connector config dict a Kafka-Connect POST would carry.
     ``snapshot_mode`` is written verbatim: pass the mode
     `plans.snapshot.resolve_snapshot_mode` resolved for this engine."""
-    d = _dialect(connection.database_type)
-    spec = _DIALECTS[d]
-    if not schema or not schema.strip():
-        if d == "as400":
-            schema = (
-                connection.extra.get("library")
-                or database
-                or spec["default_schema"]
-            )
-        elif spec["default_schema"]:
-            schema = spec["default_schema"]
-        else:
-            raise ValueError(f"{d} requires an explicit schema")
+    d = debezium_dialect(connection.database_type)
+    schema = d.resolve_schema(schema, database, connection.extra)
     if not tables:
         raise ValueError(f"no tables provided for pipeline {pipeline_name}")
 
     host = connection.extra.get("docker_hostname", connection.host)
-    port = connection.port or spec["default_port"]
+    port = connection.port or d.default_port
 
     cfg = {
-        "name": connector_name(pipeline_name, d, schema),
-        "connector.class": spec["class"],
+        "name": connector_name(pipeline_name, d.name, schema),
+        "connector.class": d.connector_class,
         "tasks.max": "1",
         "database.hostname": host,
         "database.port": str(port),
@@ -181,65 +111,19 @@ def debezium_source_config(
         "errors.log.enable": "true",
         "errors.log.include.messages": "true",
     }
-    if d == "postgresql":
-        cfg.update(
-            {
-                "database.dbname": database,
-                "plugin.name": "pgoutput",
-                "slot.name": slot_name(pipeline_name),
-                "publication.name": publication_name(
-                    pipeline_name, connection.extra
-                ),
-                "publication.autocreate.mode": connection.extra.get(
-                    "publication_autocreate", "filtered"
-                ),
-                "snapshot.locking.mode": "none",
-            }
-        )
-    elif d == "sqlserver":
-        cfg.update(
-            {
-                "database.names": database,
-                "snapshot.isolation.mode": "snapshot",
-                "database.cdc.enabled": "true",
-                "database.history.skip.unparseable.ddl": "true",
-                "database.encrypt": str(
-                    connection.extra.get("encrypt", False)
-                ).lower(),
-                "database.trustServerCertificate": str(
-                    connection.extra.get("trust_server_certificate", True)
-                ).lower(),
-            }
-        )
-    elif d == "oracle":
-        cfg.update(
-            {
-                "database.dbname": database,
-                "database.connection.adapter": "logminer",
-                "log.mining.strategy": "online_catalog",
-                "snapshot.locking.mode": "none",
-                "database.history.skip.unparseable.ddl": "true",
-            }
-        )
-    elif d == "db2":
-        cfg["database.dbname"] = database or schema
-    elif d == "as400":
-        cfg["database.dbname"] = (
-            connection.extra.get("default_library") or database or "QGPL"
-        )
-        cfg["database.schema"] = schema
-    if spec.get("unwrap"):
+    cfg.update(d.connector_props(pipeline_name, connection.extra, database, schema))
+    if d.unwrap_drop_tombstones:
         cfg.update(
             {
                 "transforms": "unwrap",
                 "transforms.unwrap.type": "io.debezium.transforms.ExtractNewRecordState",
-                "transforms.unwrap.drop.tombstones": spec["drop_tombstones"],
+                "transforms.unwrap.drop.tombstones": d.unwrap_drop_tombstones,
                 "transforms.unwrap.delete.handling.mode": "rewrite",
                 "transforms.unwrap.delete.tombstone.handling.mode": "rewrite",
                 "transforms.unwrap.add.fields": "op,source.ts_ms",
             }
         )
-    if spec.get("schema_history"):
+    if d.schema_history:
         cfg.update(
             {
                 "schema.history.internal": "io.debezium.storage.kafka.history.KafkaSchemaHistory",
@@ -261,25 +145,6 @@ def table_name_from_topic(topic: str) -> str:
     return parts[-1] if len(parts) >= 3 else topic
 
 
-def _jdbc_url(dialect: str, connection: SourceConnection, database: str) -> str:
-    port = connection.port or _DIALECTS[dialect]["default_port"]
-    if dialect == "postgresql":
-        return f"jdbc:postgresql://{connection.host}:{port}/{database}"
-    if dialect == "sqlserver":
-        enc = str(connection.extra.get("encrypt", False)).lower()
-        trust = str(
-            connection.extra.get("trust_server_certificate", True)
-        ).lower()
-        return (
-            f"jdbc:sqlserver://{connection.host}:{port};"
-            f"databaseName={database};encrypt={enc};"
-            f"trustServerCertificate={trust}"
-        )
-    if dialect == "oracle":
-        return f"jdbc:oracle:thin:@{connection.host}:{port}/{database}"
-    raise ValueError(f"unsupported JDBC sink dialect: {dialect}")
-
-
 def jdbc_sink_config(
     connector_name_: str,
     connection: SourceConnection,
@@ -294,13 +159,16 @@ def jdbc_sink_config(
     CDC metadata columns up front), deletes rewritten to rows with
     ``__deleted=true`` rather than dropped, and consumers starting at
     ``earliest`` so a fresh sink drains the backlog."""
-    d = _dialect(connection.database_type)
+    d = dialect(connection.database_type)
+    port = connection.port or d.default_port
     return {
         "name": connector_name_,
         "connector.class": "io.confluent.connect.jdbc.JdbcSinkConnector",
         "tasks.max": "1",
         "topics": ",".join(topics),
-        "connection.url": _jdbc_url(d, connection, database),
+        "connection.url": d.sink_url(
+            connection.host, port, database, connection.extra
+        ),
         "connection.user": connection.username,
         "connection.password": connection.password,
         "insert.mode": "insert",

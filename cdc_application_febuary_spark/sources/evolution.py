@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructField, StructType
 
 from ..operators.drift import ColumnChange, diff_schemas
+from .dialects import dialect
 from .typemap import to_target_ddl_type
 
 
@@ -101,23 +102,6 @@ def plan_evolution(
     return plan
 
 
-# Engine-specific DDL templates. Columns are quoted: Spark writes quoted
-# lowercase identifiers (see tests/test_jdbc_derby.py header).
-_ADD_TMPL = {
-    "postgresql": 'ALTER TABLE {table} ADD COLUMN "{col}" {type}',
-    "derby": 'ALTER TABLE {table} ADD COLUMN "{col}" {type}',
-    "sqlserver": 'ALTER TABLE {table} ADD "{col}" {type}',
-    "oracle": 'ALTER TABLE {table} ADD ("{col}" {type})',
-}
-_WIDEN_TMPL = {
-    "postgresql": 'ALTER TABLE {table} ALTER COLUMN "{col}" TYPE {type}',
-    "sqlserver": 'ALTER TABLE {table} ALTER COLUMN "{col}" {type}',
-    "oracle": 'ALTER TABLE {table} MODIFY ("{col}" {type})',
-    # Derby ALTER COLUMN SET DATA TYPE only widens VARCHAR; numeric
-    # re-types go through the rebuild path below.
-}
-
-
 def alter_statements(
     engine: str,
     table: str,
@@ -128,16 +112,19 @@ def alter_statements(
 
     ``evolved`` (the full post-evolution schema) is required only for
     engines that widen via rebuild (Derby)."""
+    d = dialect(engine)
+    if plan.add and d.add_column is None:
+        raise SchemaConflictError(f"engine {engine!r} has no ADD COLUMN template")
     spark_types = {f.name: f.dataType for f in (evolved or StructType())}
     stmts = [
-        _ADD_TMPL[engine].format(
+        d.add_column.format(
             table=table, col=f.name, type=to_target_ddl_type(engine, f.dataType)
         )
         for f in plan.add
     ]
     if not plan.widen:
         return stmts
-    if engine in _WIDEN_TMPL:
+    if d.widen_column:
         for ch in plan.widen:
             dtype = spark_types.get(ch.column)
             ddl_t = (
@@ -146,14 +133,12 @@ def alter_statements(
                 else ch.after
             )
             stmts.append(
-                _WIDEN_TMPL[engine].format(
-                    table=table, col=ch.column, type=ddl_t
-                )
+                d.widen_column.format(table=table, col=ch.column, type=ddl_t)
             )
         return stmts
-    if engine == "derby":
+    if d.widen_by_rebuild:
         if evolved is None:
-            raise ValueError("derby widen-by-rebuild needs the full schema")
+            raise ValueError(f"{d.name} widen-by-rebuild needs the full schema")
         cols = ", ".join(
             f'"{f.name}" {to_target_ddl_type(engine, f.dataType)}'
             for f in evolved.fields
@@ -163,14 +148,13 @@ def alter_statements(
         # Derby implicitly widens on INSERT SELECT (int -> bigint etc.);
         # added columns are created directly in the twin, so a combined
         # add+widen plan needs no extra ALTERs.
-        stmts = [
+        return [
             f"CREATE TABLE {tmp} ({cols})",
             f"INSERT INTO {tmp} ({sel}) SELECT {sel} FROM {table}",
             f"RENAME TABLE {table} TO {old}",
             f"RENAME TABLE {tmp} TO {table}",
             f"DROP TABLE {old}",
         ]
-        return stmts
     raise SchemaConflictError(
         f"engine {engine!r} cannot widen {[c.column for c in plan.widen]} "
         "in place and no rebuild recipe is defined"

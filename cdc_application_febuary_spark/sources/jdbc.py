@@ -22,32 +22,14 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .dialects import dialect
 from .typemap import create_table_column_types
-
-JDBC_URLS = {
-    # host, port, database -> engine-specific JDBC URL
-    # (connection shapes: reference models.py:54-160)
-    "postgresql": "jdbc:postgresql://{host}:{port}/{database}",
-    "sqlserver": "jdbc:sqlserver://{host}:{port};databaseName={database}",
-    "oracle": "jdbc:oracle:thin:@{host}:{port}/{database}",
-    "db2": "jdbc:as400://{host};libraries={database}",
-    "snowflake": "jdbc:snowflake://{host}/?db={database}",
-    # Embedded Derby (ships with Spark): `database` is a filesystem path,
-    # host/port unused. This is the engine the integration tests exercise
-    # end-to-end — the one JDBC database that exists in-container.
-    "derby": "jdbc:derby:{database};create=true",
-}
-
-DRIVERS = {
-    "postgresql": "org.postgresql.Driver",
-    "sqlserver": "com.microsoft.sqlserver.jdbc.SQLServerDriver",
-    "oracle": "oracle.jdbc.OracleDriver",
-    "db2": "com.ibm.as400.access.AS400JDBCDriver",
-}
 
 
 @dataclass
-class JdbcReadSpec:
+class _JdbcSpec:
+    """Fields both specs share (reference models.py:54-160)."""
+
     engine: str
     host: str
     port: int
@@ -55,6 +37,18 @@ class JdbcReadSpec:
     user: str
     password: str
     table: str                      # schema-qualified
+
+    @property
+    def url(self) -> str:
+        return dialect(self.engine).url(self.host, self.port, self.database)
+
+    def _with_driver(self, opts: dict[str, str]) -> dict[str, str]:
+        driver = dialect(self.engine).jdbc_driver
+        return {**opts, "driver": driver} if driver else opts
+
+
+@dataclass
+class JdbcReadSpec(_JdbcSpec):
     partition_column: str | None = None
     lower_bound: int | None = None
     upper_bound: int | None = None
@@ -62,14 +56,8 @@ class JdbcReadSpec:
     fetch_size: int = 10_000        # reference full-load batch (cdc_manager.py:1403)
     push_down_predicate: str | None = None
 
-    @property
-    def url(self) -> str:
-        return JDBC_URLS[self.engine].format(
-            host=self.host, port=self.port, database=self.database
-        )
-
     def options(self) -> dict[str, str]:
-        opts = {
+        opts = self._with_driver({
             "url": self.url,
             "dbtable": self.table
             if not self.push_down_predicate
@@ -77,9 +65,7 @@ class JdbcReadSpec:
             "user": self.user,
             "password": self.password,
             "fetchsize": str(self.fetch_size),
-        }
-        if self.engine in DRIVERS:
-            opts["driver"] = DRIVERS[self.engine]
+        })
         if self.partition_column:
             if self.lower_bound is None or self.upper_bound is None:
                 raise ValueError("partitioned read requires explicit bounds")
@@ -96,37 +82,22 @@ class JdbcReadSpec:
 
 
 @dataclass
-class JdbcWriteSpec:
-    engine: str
-    host: str
-    port: int
-    database: str
-    user: str
-    password: str
-    table: str
+class JdbcWriteSpec(_JdbcSpec):
     batch_size: int = 3_000         # reference sink batch (sink_config.py:24)
     mode: str = "append"            # insert-only, pk.mode=none (sink_config.py:159-164)
     isolation_level: str = "READ_COMMITTED"
     auto_ddl_types: bool = True     # auto.create=true analog (sink_config.py:162)
     extra: dict = field(default_factory=dict)
 
-    @property
-    def url(self) -> str:
-        return JDBC_URLS[self.engine].format(
-            host=self.host, port=self.port, database=self.database
-        )
-
     def options(self, df: DataFrame | None = None) -> dict[str, str]:
-        opts = {
+        opts = self._with_driver({
             "url": self.url,
             "dbtable": self.table,
             "user": self.user,
             "password": self.password,
             "batchsize": str(self.batch_size),
             "isolationLevel": self.isolation_level,
-        }
-        if self.engine in DRIVERS:
-            opts["driver"] = DRIVERS[self.engine]
+        })
         if self.auto_ddl_types and df is not None:
             opts["createTableColumnTypes"] = create_table_column_types(
                 self.engine, df.schema

@@ -4,8 +4,8 @@ StructType, and Spark types -> per-engine target DDL types.
 The reference round-trips types through explicit per-engine maps discovered
 at runtime (`backend/ingestion/transfer.py:34-139`; column metadata shape
 `connectors/postgresql.py:284-299`). Here the canonical schema is a Spark
-StructType, and the per-engine quirks are isolated in this one module
-(SURVEY §7 "what's hard"), notably:
+StructType; the per-engine quirks are each engine's record in
+`sources/dialects.py` (SURVEY §7 "what's hard"), notably:
 
 * SQL Server ``datetime2`` arrives from Debezium as epoch-nanos int64
   (`transfer.py:32-33,55`) -> LongType on ingest + an explicit conversion
@@ -38,6 +38,8 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+from .dialects import dialect
 
 # source engine type name (lowered, params stripped) -> Spark type factory
 _COMMON: dict[str, type[DataType] | DataType] = {
@@ -88,23 +90,12 @@ _COMMON: dict[str, type[DataType] | DataType] = {
     "decimal": DecimalType(38, 10),
 }
 
-# Engine-specific overrides keyed by engine name.
-_ENGINE_OVERRIDES: dict[str, dict[str, DataType]] = {
-    # Debezium emits datetime2 as epoch-nanos int64 (transfer.py:32-33) —
-    # land it as a long and convert explicitly downstream.
-    "sqlserver": {"datetime2": LongType()},
-    "postgresql": {"serial": IntegerType(), "bigserial": LongType()},
-    "oracle": {"varchar2": StringType(), "nvarchar2": StringType(),
-               "binary_float": FloatType(), "binary_double": DoubleType(),
-               "raw": BinaryType()},
-    "db2": {"decfloat": DoubleType()},
-}
-
 _PARAM_RE = re.compile(r"^([a-z_ 0-9]*?)\s*\((\s*\d+\s*(?:,\s*\d+\s*)?)\)$")
 
 
 def to_spark_type(engine: str, type_name: str) -> DataType:
     """Map one source column type (e.g. ``'numeric(10,2)'``) to a Spark type."""
+    override = dialect(engine).type_overrides
     t = type_name.strip().lower()
     m = _PARAM_RE.match(t)
     params: list[int] = []
@@ -115,7 +106,6 @@ def to_spark_type(engine: str, type_name: str) -> DataType:
         precision = min(params[0], 38)
         scale = params[1] if len(params) > 1 else 0
         return DecimalType(precision, scale)
-    override = _ENGINE_OVERRIDES.get(engine.lower(), {})
     if t in override:
         return override[t]
     if t in _COMMON:
@@ -147,48 +137,12 @@ def datetime2_nanos_to_timestamp(col: Column | str) -> Column:
     return F.timestamp_micros(micros)
 
 
-# Spark type -> target DDL type per engine (for createTableColumnTypes /
-# auto-DDL; reference transfer.py:431-829 generates these CREATE TABLEs).
-_TARGET_DDL: dict[str, dict[str, str]] = {
-    "postgresql": {
-        "byte": "smallint", "short": "smallint", "int": "integer",
-        "bigint": "bigint", "float": "real", "double": "double precision",
-        "boolean": "boolean", "string": "text", "date": "date",
-        "timestamp": "timestamp", "binary": "bytea",
-    },
-    "sqlserver": {
-        "byte": "tinyint", "short": "smallint", "int": "int",
-        "bigint": "bigint", "float": "real", "double": "float",
-        "boolean": "bit", "string": "nvarchar(max)", "date": "date",
-        "timestamp": "datetime2", "binary": "varbinary(max)",
-    },
-    "oracle": {
-        "byte": "NUMBER(3)", "short": "NUMBER(5)", "int": "NUMBER(10)",
-        "bigint": "NUMBER(19)", "float": "BINARY_FLOAT",
-        "double": "BINARY_DOUBLE", "boolean": "NUMBER(1)",
-        "string": "CLOB", "date": "DATE", "timestamp": "TIMESTAMP",
-        "binary": "BLOB",
-    },
-    # Embedded Derby (integration-tested in-container). VARCHAR over CLOB:
-    # Derby CLOBs cannot be compared/filtered, which breaks predicate
-    # pushdown on string columns.
-    "derby": {
-        "byte": "smallint", "short": "smallint", "int": "integer",
-        "bigint": "bigint", "float": "real", "double": "double",
-        "boolean": "boolean", "string": "varchar(4000)", "date": "date",
-        "timestamp": "timestamp", "binary": "blob",
-    },
-}
-
-
 def to_target_ddl_type(engine: str, dtype: DataType) -> str:
-    simple = dtype.simpleString()
-    if simple.startswith("decimal"):
-        if engine == "oracle":
-            return simple.upper().replace("DECIMAL", "NUMBER")
-        return simple.replace("decimal", "numeric" if engine == "postgresql" else "decimal")
-    table = _TARGET_DDL.get(engine, _TARGET_DDL["postgresql"])
-    return table.get(simple, table["string"])
+    """Spark type -> the engine's DDL type (createTableColumnTypes / auto-DDL)."""
+    d = dialect(engine)
+    if isinstance(dtype, DecimalType):
+        return d.decimal_ddl.format(p=dtype.precision, s=dtype.scale)
+    return d.ddl_types.get(dtype.simpleString(), d.ddl_types["string"])
 
 
 def create_table_column_types(engine: str, schema: StructType) -> str:

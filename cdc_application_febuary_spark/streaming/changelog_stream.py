@@ -35,7 +35,7 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
 from ..functions.changelog import decode_debezium
-from ..plans.snapshot import normalize_engine
+from ..sources.dialects import dialect
 from .replay import drain
 
 
@@ -82,7 +82,7 @@ def topic_pattern(pipeline: str, engine: str = "postgresql") -> str:
     reference topic naming (`debezium_config.py:747-775`):
     ``{pipeline}.{schema}.{table}`` — SQL Server inserts the database for a
     4-part name (`{pipeline}.{db}.{schema}.{table}``)."""
-    parts = 4 if normalize_engine(engine) == "sqlserver" else 3
+    parts = 4 if dialect(engine).database_in_topic else 3
     seg = r"[^.]+"
     return rf"^{pipeline}\." + r"\.".join([seg] * (parts - 1)) + "$"
 

@@ -36,6 +36,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..sources.dialects import dialect
 from ..sources.jdbc import JdbcWriteSpec
 
 
@@ -126,8 +127,9 @@ class TransactionalJdbcSink:
         clauses = [f"MERGE INTO {t} t USING {s} s ON {on}"]
         if self.delete_col is not None:
             # CAST before comparing: on Derby the flag lands as CLOB (see
-            # __call__) and CLOB equality is illegal; the cast is a no-op
-            # on engines whose dialects map strings to VARCHAR/TEXT.
+            # `typed_staging` in sources/dialects.py) and CLOB equality is
+            # illegal; the cast is a no-op on engines whose dialects map
+            # strings to VARCHAR/TEXT.
             tomb = (
                 f"COALESCE(CAST(s.{_q(self.delete_col)} AS VARCHAR(32)), "
                 f"'false') = 'true'"
@@ -179,19 +181,15 @@ class TransactionalJdbcSink:
                 c for c in collapsed.columns if c != self.delete_col
             ]
 
-            # 1) distributed bulk load into staging (idempotent overwrite).
-            # On Derby, skip the typemap DDL and let Spark's DerbyDialect
-            # create string columns as CLOB: the writer's setNull uses the
-            # dialect's jdbcNullType (Types.CLOB), which Derby rejects
-            # against a VARCHAR column (ERROR 22005) the moment a string
-            # is NULL — tombstones always carry NULLs. Matching the
-            # dialect keeps writer and DDL types agreeing by construction.
+            # 1) distributed bulk load into staging (idempotent overwrite),
+            # typed by the typemap unless the engine's record says the
+            # staging table keeps Spark's own DDL (Derby's CLOB quirk).
             staging_spec = JdbcWriteSpec(
                 **{
                     **self.spec.__dict__,
                     "table": self._staging_table(),
                     "mode": "overwrite",
-                    "auto_ddl_types": self.spec.engine != "derby",
+                    "auto_ddl_types": dialect(self.spec.engine).typed_staging,
                     "extra": dict(self.spec.extra),
                 }
             )

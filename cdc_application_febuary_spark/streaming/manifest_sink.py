@@ -47,6 +47,13 @@ def last_committed_batch(spark: SparkSession, table_path: str) -> int | None:
     return None
 
 
+def is_replay(spark: SparkSession, table_path: str, batch_id: int) -> bool:
+    """True when ``batch_id`` is at or below the newest committed batch id:
+    a replayed micro-batch the store already reflects, to be dropped whole."""
+    seen = last_committed_batch(spark, table_path)
+    return seen is not None and batch_id <= seen
+
+
 def append_batch(
     batch: DataFrame,
     batch_id: int,
@@ -55,9 +62,7 @@ def append_batch(
 ) -> int | None:
     """Idempotently append one micro-batch; returns the committed version,
     or None when the batch id was already committed (replay dropped)."""
-    spark = batch.sparkSession
-    seen = last_committed_batch(spark, table_path)
-    if seen is not None and batch_id <= seen:
+    if is_replay(batch.sparkSession, table_path, batch_id):
         return None
     return mt.write_table(
         batch,
@@ -78,8 +83,7 @@ def upsert_batch(
     """Idempotent per-batch MERGE (CDC upsert streams): replays are dropped
     whole, fresh batches run the file-pruned copy-on-write merge."""
     spark = batch.sparkSession
-    seen = last_committed_batch(spark, table_path)
-    if seen is not None and batch_id <= seen:
+    if is_replay(spark, table_path, batch_id):
         return None
     return mt.merge_upsert(
         spark,

@@ -134,8 +134,10 @@ def test_as400_cdc_only_without_offset_runs_the_full_load(spark, tmp_path):
 )
 def test_connected_plan_config_and_topics_follow_the_plan(engine):
     """For every engine (aliases too) x mode x {no offset, captured offset}
-    the connector writes the plan's snapshot mode and every topic matches
-    the plan's subscribe pattern."""
+    x {explicit, blank schema} the connector writes the plan's snapshot
+    mode, every topic matches the plan's subscribe pattern, and each
+    topic's ``{schema}.{table}`` tail is a table the connector includes.
+    A blank schema takes the engine's default; oracle and db2 have none."""
     from cdc_application_febuary_spark.plans.runner import (
         plan_connected_pipeline,
     )
@@ -146,26 +148,35 @@ def test_connected_plan_config_and_topics_follow_the_plan(engine):
     conn = SourceConnection(
         host="h", port=None, username="u", password="p", database_type=engine
     )
-    for mode in ("full_load_and_cdc", "full_load_only", "cdc_only"):
-        for lsn in (None, "lsn:42"):
-            plan = plan_connected_pipeline(
-                pipeline_id="pipe",
-                connection=conn,
-                database="db1",
-                schema="s1",
-                tables=["t1", "t2"],
-                mode=mode,
-                full_load_lsn=lsn,
-            )
-            case = (engine, mode, lsn)
-            assert (
-                plan.connector_config["snapshot.mode"]
-                == plan.stream_plan.snapshot_mode
-            ), case
-            for t in plan.topics:
-                assert re.fullmatch(plan.subscribe_pattern, t), (case, t)
-            parts = 4 if plan.stream_plan.engine == "sqlserver" else 3
-            assert all(len(t.split(".")) == parts for t in plan.topics), case
+    for schema in ("s1", ""):
+        for mode in ("full_load_and_cdc", "full_load_only", "cdc_only"):
+            for lsn in (None, "lsn:42"):
+                call = functools.partial(
+                    plan_connected_pipeline,
+                    pipeline_id="pipe",
+                    connection=conn,
+                    database="db1",
+                    schema=schema,
+                    tables=["t1", "t2"],
+                    mode=mode,
+                    full_load_lsn=lsn,
+                )
+                if not schema and engine in ("oracle", "db2"):
+                    with pytest.raises(ValueError, match=engine):
+                        call()
+                    continue
+                plan = call()
+                case = (engine, schema, mode, lsn)
+                assert (
+                    plan.connector_config["snapshot.mode"]
+                    == plan.stream_plan.snapshot_mode
+                ), case
+                included = plan.connector_config["table.include.list"].split(",")
+                for t in plan.topics:
+                    assert re.fullmatch(plan.subscribe_pattern, t), (case, t)
+                    assert ".".join(t.split(".")[-2:]) in included, (case, t)
+                parts = 4 if plan.stream_plan.engine == "sqlserver" else 3
+                assert all(len(t.split(".")) == parts for t in plan.topics), case
 
 
 def test_connected_pipeline_config_topics_pattern_roundtrip(spark, tmp_path):

@@ -1,8 +1,10 @@
 """One owner per decision, enforced over the package's AST.
 
-* How a pipeline starts (engine aliases, pipeline modes) is decided in
-  `plans/snapshot.py` only: no other module compares against a mode or an
-  alias name, or keeps its own alias table.
+* How a pipeline starts (snapshot mode, full load, stream) is decided in
+  `plans/snapshot.py` only: no other module compares against a mode name.
+* Every per-engine fact is its engine's record in `sources/dialects.py`:
+  no other module compares against an engine or alias name or keys a
+  dict by one (`queries/` is exempt: its fixture rows name engines).
 * Temporary directories come from `tempdirs.scratch_dir` only, which
   removes them when the process exits."""
 
@@ -15,7 +17,10 @@ from pathlib import Path
 ROOT = Path(__file__).resolve().parent.parent
 PKG = ROOT / "cdc_application_febuary_spark"
 MODE_NAMES = {"cdc_only", "full_load_only", "full_load_and_cdc"}
-ALIAS_NAMES = {"mssql", "ibm_i"}
+ENGINE_NAMES = {
+    "postgresql", "sqlserver", "oracle", "db2", "as400", "snowflake", "s3",
+    "derby", "mssql", "ibm_i",
+}
 
 
 def _modules():
@@ -30,15 +35,15 @@ def _literals(node):
     return {e.value for e in elts if isinstance(e, ast.Constant) and isinstance(e.value, str)}
 
 
-def _start_decisions(tree):
+def _sites(tree, names, dict_keys):
+    """Line of each comparison against one of ``names``, and (with
+    ``dict_keys``) of each dict literal keyed by one."""
     for node in ast.walk(tree):
         if isinstance(node, ast.Compare):
-            for operand in [node.left, *node.comparators]:
-                if _literals(operand) & (MODE_NAMES | ALIAS_NAMES):
-                    yield node.lineno
-                    break
-        elif isinstance(node, ast.Dict):
-            if any(k is not None and _literals(k) & ALIAS_NAMES for k in node.keys):
+            if any(_literals(o) & names for o in [node.left, *node.comparators]):
+                yield node.lineno
+        elif dict_keys and isinstance(node, ast.Dict):
+            if any(k is not None and _literals(k) & names for k in node.keys):
                 yield node.lineno
 
 
@@ -47,12 +52,31 @@ def test_only_plans_snapshot_decides_how_a_pipeline_starts():
         f"{rel}:{line}"
         for rel, tree in _modules()
         if rel != "plans/snapshot.py"
-        for line in _start_decisions(tree)
+        for line in _sites(tree, MODE_NAMES, dict_keys=False)
     ]
     assert found == [], (
-        "compare against a pipeline mode or engine alias outside "
-        f"plans/snapshot.py (read the StreamStartPlan instead): {found}"
+        "compare against a pipeline mode outside plans/snapshot.py "
+        f"(read the StreamStartPlan instead): {found}"
     )
+
+
+def test_only_sources_dialects_names_an_engine():
+    found = [
+        f"{rel}:{line}"
+        for rel, tree in _modules()
+        if rel != "sources/dialects.py" and not rel.startswith("queries/")
+        for line in _sites(tree, ENGINE_NAMES, dict_keys=True)
+    ]
+    assert found == [], (
+        "engine or alias name compared against or used as a dict key "
+        f"outside sources/dialects.py (read the engine's record): {found}"
+    )
+
+
+def test_engine_names_are_the_dialect_table():
+    from cdc_application_febuary_spark.sources.dialects import ALIASES, DIALECTS
+
+    assert ENGINE_NAMES == set(DIALECTS) | set(ALIASES)
 
 
 def test_only_the_helper_makes_temp_dirs():

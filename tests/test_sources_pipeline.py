@@ -116,6 +116,47 @@ def test_jdbc_write_spec_options(spark):
     assert partition_bounds_query("dbo.t", "id").startswith("SELECT MIN(id)")
 
 
+def _engine_outputs(engine, df):
+    """What each per-engine consumer makes of one engine name."""
+    from pyspark.sql.types import StructField, StructType
+
+    from cdc_application_febuary_spark.operators.drift import ColumnChange
+    from cdc_application_febuary_spark.sources import evolution as ev
+
+    conn = dict(host="h", port=1, database="db", user="u", password="p", table="t")
+    plan = ev.EvolutionPlan(
+        add=[StructField("c", StringType())],
+        widen=[ColumnChange("x", "type_changed", "int", "bigint")],
+    )
+    evolved = StructType(
+        [StructField("x", LongType()), StructField("c", StringType())]
+    )
+    return {
+        "spark_type": lambda: to_spark_type(engine, "datetime2"),
+        "ddl_type": lambda: to_target_ddl_type(engine, StringType()),
+        "read": lambda: JdbcReadSpec(engine=engine, **conn).options(),
+        "write": lambda: JdbcWriteSpec(engine=engine, **conn).options(df),
+        "alter": lambda: ev.alter_statements(engine, "t", plan, evolved),
+    }
+
+
+@pytest.mark.parametrize("alias,canonical", [("mssql", "sqlserver"), ("ibm_i", "as400")])
+def test_alias_means_its_engine_and_unknown_names_raise(spark, alias, canonical):
+    """An alias gives its engine's result from every consumer (the alter
+    statements only where the engine has ALTER templates); an unknown
+    engine name raises instead of falling back to another engine's."""
+    df = spark.createDataFrame([(1, "a")], ["id", "name"])
+    got = _engine_outputs(alias, df)
+    want = _engine_outputs(canonical, df)
+    for name in ("spark_type", "ddl_type", "read", "write"):
+        assert got[name]() == want[name](), name
+    if alias == "mssql":
+        assert got["alter"]() == want["alter"]()
+    for name, call in _engine_outputs("nonsense", df).items():
+        with pytest.raises(ValueError, match="nonsense"):
+            call()
+
+
 # --- full-load pipeline -----------------------------------------------------
 def test_run_full_load(spark, tmp_path, sf_small):
     src = spark.read.parquet(f"{sf_small}/orders.parquet")
